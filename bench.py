@@ -487,6 +487,15 @@ def main() -> None:
         "loadavg_start": round(loadavg_start, 2),
         "loadavg_end": round(os.getloadavg()[0], 2),
         "settle_wait_sec": settle_wait,
+        # session state the timed rows reuse (set up by the warm-up
+        # above, never a cached result): tables.load's parquet schema
+        # memo and the generated-class cache cap
+        "session_state": {
+            "parquet_schema_memo": "tables.load: one inference per session and file identity (real path, mtime_ns, size)",
+            "codegen_cache_max_entries": int(
+                spark.conf.get("spark.sql.codegen.cache.maxEntries")
+            ),
+        },
     }
     if contended_start:
         out["contended_start"] = True

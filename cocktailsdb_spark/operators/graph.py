@@ -58,9 +58,10 @@ _POW10 = [10**i for i in range(LEXPACK_MAX_DIGITS + 1)]
 
 
 def lexpack(side: int, key: Column) -> Column:
-    """Pack a non-negative integer ``key`` (< 10^13) and a 0/1 ``side``
-    flag into a LONG whose numeric order equals the lexicographic order
-    of the strings  tag_side || digits(key)  (tag_0 < tag_1).
+    """Pack a non-negative integer ``key`` (< 10^13; any other non-NULL
+    key fails the query) and a 0/1 ``side`` flag into a LONG whose
+    numeric order equals the lexicographic order of the strings
+    tag_side || digits(key)  (tag_0 < tag_1).
 
     Why it is order-isomorphic (within one side): let a, b be the digit
     strings of x, y (no leading zeros) and A = x·10^(L−|a|),
@@ -83,7 +84,20 @@ def lexpack(side: int, key: Column) -> Column:
         F.array(*[F.lit(p) for p in _POW10]),
         (F.lit(LEXPACK_MAX_DIGITS + 1) - ln).cast("int"),
     )
-    return (F.lit(side).cast("long") * F.lit(1 << 60)) + s * pad * 16 + ln
+    packed = (F.lit(side).cast("long") * F.lit(1 << 60)) + s * pad * 16 + ln
+    # outside [0, 10^13) the index above leaves _POW10 (a 15-digit key
+    # wraps to its LAST element through element_at's negative index) or
+    # the '-' sign counts as a digit: the packing would be silently wrong
+    # and no longer order-isomorphic, so such a key fails the query
+    return F.when(
+        (s < 0) | (s >= _POW10[LEXPACK_MAX_DIGITS]),
+        F.raise_error(
+            F.concat(
+                F.lit(f"lexpack: key outside [0, 10^{LEXPACK_MAX_DIGITS}): "),
+                s.cast("string"),
+            )
+        ),
+    ).otherwise(packed)
 
 
 def lexunpack(packed: Column, tag0: str, tag1: str) -> Column:
@@ -236,17 +250,16 @@ def pagerank(
     full = nodes.join(ranks.hint("shuffle_hash"), "node", "left").select(
         "node", F.coalesce(F.col("r"), F.lit(q_const)).alias("r")
     )
-    if decode is not None:
-        # callers that iterate on packed integer node ids (lexpack) map
-        # back to the string id HERE, on the node-sized frame BEFORE the
-        # top-k cut, so the (r desc, node asc) ordering — including rank
-        # ties at the cut — is computed on exactly the strings the
-        # all-string pipeline would have ordered
-        full = full.select(decode(F.col("node")).alias("node"), "r")
+    # callers that iterate on packed integer node ids (lexpack) map back
+    # to the string id on the top_k rows only. The cut orders by the
+    # packed long, which is order-ISOMORPHIC to the string order (lexpack
+    # docstring) — so rank ties at the cut break exactly as the
+    # all-string pipeline's do
+    node = F.col("node") if decode is None else decode(F.col("node"))
     out = (
         full.orderBy(F.desc("r"), F.asc("node"))
         .limit(top_k)
-        .select("node", F.col("r").alias("rank_score"))
+        .select(node.alias("node"), F.col("r").alias("rank_score"))
         # pin the (top_k-row) result so the edge cache can be released
         # before the caller consumes the frame
         .localCheckpoint()

@@ -60,6 +60,19 @@ def get_spark(
         # codegen for wide aggregates; even when HotSpot declines to JIT a
         # huge method, running its bytecode beats Spark's interpreter.
         .config("spark.sql.codegen.hugeMethodLimit", "65535")
+        # Generated-class cache (static: read once, when the JVM first
+        # generates code). The default 100 entries is smaller than one
+        # pass of the benchmark's 8 corpus operators, which compiles ~162
+        # distinct classes (pagerank 57, bm25 36, semantic_dedup and
+        # embedding_topk_ivf 20 each), so a warm session evicted in a
+        # cycle and recompiled all of them (~9-12 ms each) on every pass;
+        # at 1000 a steady pass compiles 0. Plans with inlined literals
+        # (a bar batch's watermark) add 18 new classes per batch at any
+        # size, so a long session fills the cache to its cap. Measured
+        # per entry: ~50-60 KB of live heap (source text, bytecode,
+        # class loader) plus ~5 KB of metaspace, so a full cache holds
+        # ~60 MB — small next to the driver heap.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

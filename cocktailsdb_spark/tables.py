@@ -1,12 +1,16 @@
 """Fixture-table access (TESTDATA.md star schema).
 
 One parquet per table; scans are plain ``spark.read.parquet`` so Catalyst
-gets full pushdown/pruning. Nothing is cached here — callers decide.
+gets full pushdown/pruning. The only state kept here is each file's
+parquet schema, memoized per session and file identity (see
+``_read_parquet``) so a repeated load starts no schema-inference job.
+DataFrames and results are never cached here — callers decide.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +31,49 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Raw (pre-normalization) parquet schema per (application id, file
+# identity). Inferring a schema starts one Spark job that reads a footer;
+# passing the memoized schema back starts none. The key changes whenever
+# the session or any byte-count/mtime of the file(s) changes, so a
+# re-encoded fixture is inferred again. Only schemas live here, never a
+# DataFrame or a result.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(real path, mtime_ns, size) of a parquet file; for a directory of
+    part files, the real path plus the sorted (name, mtime_ns, size) of
+    every file under it. None when the path cannot be stat'ed locally
+    (a remote URI, or a file that vanished mid-walk): no memo then."""
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+        if not stat.S_ISDIR(st.st_mode):
+            return (real, st.st_mtime_ns, st.st_size)
+        parts = []
+        for root, _, files in os.walk(real):
+            for f in files:
+                full = os.path.join(root, f)
+                fst = os.stat(full)
+                parts.append((os.path.relpath(full, real), fst.st_mtime_ns, fst.st_size))
+    except OSError:
+        return None
+    return (real, tuple(sorted(parts)))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, T.StructType]:
+    """``spark.read.parquet(path)`` and its raw schema, inferring the
+    schema only on the first read of this file identity in this session."""
+    ident = _file_identity(path)
+    key = ident and (spark.sparkContext.applicationId, ident)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path), schema
+    df = spark.read.parquet(path)
+    if key:
+        _SCHEMAS[key] = df.schema
+    return df, df.schema
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -45,15 +92,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the raw int64 nanos and convert exactly (integer div — ns values
     # exceed 2^53, double math would corrupt them).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+    df, schema = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # The fixtures' at-rest encoding is not ours to control: µs-no-timezone
     # parquet reads back as TIMESTAMP_NTZ in Spark 4, which rejects numeric
     # casts and serializes without a zone offset. Normalize every NTZ column
     # to TimestampType once at the scan (session tz is pinned UTC above, so
     # the instant is unambiguous) — SURVEY §1.3 maps timestamp → TimestampType.
-    for field in df.schema.fields:
+    # (the raw schema: events' nanos `ts` is a LongType there, which no
+    # branch below matches)
+    for field in schema.fields:
         if isinstance(field.dataType, T.TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
         # DECIMAL-encoded measures (a plausible future fixture

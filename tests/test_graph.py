@@ -274,3 +274,20 @@ def test_lpa_packed_keys_match_string_pipeline_on_lex_ties(spark):
     )
     assert got == want
     assert want[0][0] == "c10"  # the lex-min label won, not the numeric min
+
+
+def test_lexpack_rejects_keys_outside_its_range(spark):
+    """Keys >= 10^13 used to wrap through element_at's negative index (a
+    15-digit key silently took the 13-digit pad) and negative keys
+    counted their sign as a digit: both must fail the query instead."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    for key in (10**13, 10**14, 10**15, -1):
+        df = spark.createDataFrame([(key,)], "key long")
+        with pytest.raises(Exception, match="lexpack: key outside"):
+            df.select(G.lexpack(0, F.col("key"))).collect()
+    # the largest supported key and a NULL key still pack
+    df = spark.createDataFrame([(10**13 - 1,), (None,)], "key long")
+    got = [r[0] for r in df.select(G.lexpack(1, F.col("key"))).collect()]
+    assert got[0] is not None and got[1] is None

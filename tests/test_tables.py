@@ -219,3 +219,92 @@ def test_spread_repartitions_single_file_scan(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
         spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
+
+
+def _next_job(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _write_events_nanos(path: str, n: int, extra_col: bool = False) -> None:
+    """events as TIMESTAMP(NANOS), the encoding that needs load()'s
+    nanos→micros shim on top of the memoized (LongType `ts`) schema."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {
+        "event_id": pa.array(range(n), pa.int64()),
+        "ts": pa.array(pd.Series(_TS_CASES * n)[:n], pa.timestamp("ns")),
+        "user_id": pa.array([7] * n, pa.int64()),
+    }
+    if extra_col:
+        cols["value"] = pa.array([1.5] * n, pa.float64())
+    pq.write_table(pa.table(cols), path)
+
+
+def test_load_second_call_starts_no_job_and_keeps_schema(spark, tmp_path):
+    """The parquet schema is inferred once per file identity per session:
+    the first load of a table starts the inference job, a repeat load of
+    the same unchanged file(s) starts none and yields the same normalized
+    schema and values — for a single file (events, nanos `ts`) and for a
+    directory of part files (orders, a DATE column)."""
+    import datetime as _dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _write_events_nanos(str(tmp_path / "events.parquet"), 6)
+    odir = tmp_path / "orders.parquet"
+    odir.mkdir()
+    for part in range(2):
+        pq.write_table(
+            pa.table(
+                {
+                    "o_orderkey": pa.array([part * 10 + 1, part * 10 + 2], pa.int64()),
+                    "o_orderdate": pa.array(
+                        [_dt.date(2024, 1, 1 + part)] * 2, pa.date32()
+                    ),
+                }
+            ),
+            str(odir / f"part-{part}.parquet"),
+        )
+    for name in ("events", "orders"):
+        j0 = _next_job(spark)
+        first = load(spark, str(tmp_path), name)
+        j1 = _next_job(spark)
+        second = load(spark, str(tmp_path), name)
+        j2 = _next_job(spark)
+        assert j1 > j0, f"{name}: the first load must infer the schema"
+        assert j2 == j1, f"{name}: a repeat load started {j2 - j1} job(s)"
+        assert second.schema == first.schema
+        assert sorted(second.collect()) == sorted(first.collect())
+    assert isinstance(second.schema["o_orderdate"].dataType, T.TimestampType)
+
+
+def test_load_reinfers_schema_after_rewrite(spark, tmp_path):
+    """A rewritten file (new size/mtime) is a new identity: load() infers
+    again and sees the new schema, in a single file or in one part file
+    of a directory."""
+    path = str(tmp_path / "events.parquet")
+    _write_events_nanos(path, 4)
+    before = load(spark, str(tmp_path), "events")
+    assert "value" not in before.columns
+    _write_events_nanos(path, 4, extra_col=True)
+    j0 = _next_job(spark)
+    after = load(spark, str(tmp_path), "events")
+    assert _next_job(spark) > j0
+    assert "value" in after.columns
+    assert isinstance(after.schema["ts"].dataType, T.TimestampType)
+    assert after.count() == 4
+
+    ddir = tmp_path / "dir"
+    pdir = ddir / "events.parquet"
+    pdir.mkdir(parents=True)
+    _write_events_nanos(str(pdir / "part-0.parquet"), 4)
+    _write_events_nanos(str(pdir / "part-1.parquet"), 4)
+    assert "value" not in load(spark, str(ddir), "events").columns
+    _write_events_nanos(str(pdir / "part-1.parquet"), 4, extra_col=True)
+    os.remove(pdir / "part-0.parquet")
+    j0 = _next_job(spark)
+    assert "value" in load(spark, str(ddir), "events").columns
+    assert _next_job(spark) > j0

@@ -3,7 +3,7 @@
 Times individual registry queries under the bench's exact methodology
 (warm session, noop sink, best-of-N) and splits plan-build (Python →
 analyzed/optimized plan) from execution, so optimization targets the
-right layer. Optionally dumps explain("formatted") to plans/r14/.
+right layer. Optionally dumps explain("formatted") to plans/r15/.
 
     python tools/r15_profile.py --only a,b,c [--reps 3] [--explain before]
     python tools/r15_profile.py --conf spark.sql.files.openCostInBytes=262144 --only ...
@@ -29,7 +29,7 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--only", required=True)
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--explain", default=None, help="suffix: write plans/r14/<q>_<suffix>.txt")
+    ap.add_argument("--explain", default=None, help="suffix: write plans/r15/<q>_<suffix>.txt")
     ap.add_argument("--conf", action="append", default=[], help="k=v session conf override")
     args = ap.parse_args()
 
