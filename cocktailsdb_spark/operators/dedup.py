@@ -99,63 +99,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _ngram_prefix_parts(
-    docs: DataFrame, n: int, threshold: float, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Candidate generation for the prefix-filtered Jaccard join: returns
-    (candidate pairs, checkpointed sorted-shingle base). Split out so the
-    scaling diagnostics can count candidates separately from verified
-    output (tools/neardup_pair_counts.py)."""
-    base = spread(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.array_sort(shingles(tokens(), n)).alias("sh"),
-    ).withColumn("n_sh", F.size("sh")).localCheckpoint()
-    # prefix length: n_sh - ceil(t*n_sh) + 1
-    prefix_len = (F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1).cast("int")
-    pref = base.select(
-        "doc_id", "n_sh", F.posexplode(F.slice("sh", 1, prefix_len)).alias("pos", "shingle")
-    )
-    a, b = pref.alias("a"), pref.alias("b")
-    # PPJoin positional filter (Xiao et al. 2008, public): J ≥ t needs
-    # overlap α = ceil(t/(1+t)·(|A|+|B|)); a match at 0-based positions
-    # (i, j) of the sorted sets bounds the achievable overlap by
-    # 1 + min(|A|−i−1, |B|−j−1), so matches that cannot reach α generate
-    # no candidate. Recall is intact: for a true pair, its FIRST common
-    # prefix element leaves ≥ α common elements at/after both positions.
-    # Measured sf1: candidates 43.5M → a fraction, same verified output.
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold))
-        * (F.col("a.n_sh") + F.col("b.n_sh"))
-    )
-    ubound = F.lit(1) + F.least(
-        F.col("a.n_sh") - F.col("a.pos") - 1, F.col("b.n_sh") - F.col("b.pos") - 1
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            # length filter: max(|A|,|B|)·t ≤ min(|A|,|B|) is necessary for J ≥ t
-            & (F.col("a.n_sh") * F.lit(threshold) <= F.col("b.n_sh"))
-            & (F.col("b.n_sh") * F.lit(threshold) <= F.col("a.n_sh"))
-            & (ubound >= alpha),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    return cand, base
-
-
-def ngram_prefix_candidates(
-    docs: DataFrame, n: int = 3, threshold: float = 0.5, id_col: str = "doc_id"
-) -> DataFrame:
-    """The PRE-verification candidate pairs of
-    :func:`ngram_jaccard_pairs_prefix` — the frame whose cardinality
-    separates "output grew" from "plan degraded" in scaling runs."""
-    cand, _ = _ngram_prefix_parts(docs, n, threshold, id_col)
-    return cand
-
-
 def ngram_jaccard_pairs_prefix(
     docs: DataFrame, n: int = 3, threshold: float = 0.5, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -179,7 +122,44 @@ def ngram_jaccard_pairs_prefix(
     dataset) — recomputing the shingle sort of 100 TB three times is the
     thing to avoid.
     """
-    cand, base = _ngram_prefix_parts(docs, n, threshold, id_col)
+    base = spread(docs).select(
+        F.col(id_col).alias("doc_id"),
+        F.array_sort(shingles(tokens(), n)).alias("sh"),
+    ).withColumn("n_sh", F.size("sh")).localCheckpoint()
+    # prefix length: n_sh - ceil(t*n_sh) + 1
+    prefix_len = (F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1).cast("int")
+    pref = base.select(
+        "doc_id", "n_sh", F.posexplode(F.slice("sh", 1, prefix_len)).alias("pos", "shingle")
+    )
+    a, b = pref.alias("a"), pref.alias("b")
+    # PPJoin positional filter (Xiao et al. 2008, public): J ≥ t needs
+    # overlap α = ceil(t/(1+t)·(|A|+|B|)); a match at 0-based positions
+    # (i, j) of the sorted sets bounds the achievable overlap by
+    # 1 + min(|A|−i−1, |B|−j−1), so matches that cannot reach α generate
+    # no candidate. Recall is intact: for a true pair, its FIRST common
+    # prefix element leaves ≥ α common elements at/after both positions.
+    # Measured sf1: candidates 43.5M → a fraction, same verified output
+    # (per-SF candidate vs verified counts: scaling_r8.json "neardup_pairs").
+    alpha = F.ceil(
+        F.lit(threshold / (1.0 + threshold))
+        * (F.col("a.n_sh") + F.col("b.n_sh"))
+    )
+    ubound = F.lit(1) + F.least(
+        F.col("a.n_sh") - F.col("a.pos") - 1, F.col("b.n_sh") - F.col("b.pos") - 1
+    )
+    cand = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            # length filter: max(|A|,|B|)·t ≤ min(|A|,|B|) is necessary for J ≥ t
+            & (F.col("a.n_sh") * F.lit(threshold) <= F.col("b.n_sh"))
+            & (F.col("b.n_sh") * F.lit(threshold) <= F.col("a.n_sh"))
+            & (ubound >= alpha),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
     fa = base.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"),
                      F.col("n_sh").alias("n_a"))
     fb = base.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"),

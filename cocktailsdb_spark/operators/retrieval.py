@@ -143,7 +143,7 @@ def _write_postings_segment(docs: DataFrame, seg_dir: str) -> None:
     # cluster each bucket's files BY TERM: parquet row-group min/max on a
     # sorted column lets the probe's pushed `term IN (...)` skip every
     # row group that holds other terms — measured at the 4th decade
-    # (tools/bm25_scale_probe.py): without the sort the probe read whole
+    # (scaling_r11.json "sf100_bm25"): without the sort the probe read whole
     # buckets and grew 2.2x per 10x corpus; with it the probe reads only
     # the query terms' row groups (the clustered-index contract)
     tf.sortWithinPartitions("term_bucket", "term").write.mode(

@@ -64,147 +64,7 @@ from . import registry_stats  # noqa: E402,F401
 # (package-internal helpers + constants it references) against the hash
 # recorded in driver_evidence.json when its last driver row landed —
 # maintained by `python tools/driver_rotation.py refresh` after each round.
-# The static list below is the FALLBACK order when no evidence file exists.
-_DRIVER_PRIORITY: list[str] = [
-    # round-5 session-2 additions (never driver-checked): BFS levels,
-    # CCNet tertiles, PMI collocations, winsorized stats, distributed
-    # RLE-run advisor, per-source cap, forward as-of, hopping stream
-    "graph_bfs_levels",
-    "ccnet_quality_buckets",
-    "pmi_collocations",
-    "winsorized_stats",
-    "encoding_runs_report",
-    "source_cap_firstn",
-    "asof_join_next",
-    "streaming_sliding_halfhour",
-    "incremental_join_mv",
-    "mad_outlier_report",
-    "hll_sketch_rollup",
-    "corpus_drift_kl",
-    "python_datasource_read",
-    "range_pruned_revenue",
-    "zorder_box_revenue",
-    "observed_load_metrics",
-    "fk_orphans_report",
-    "embedding_dim_ablation",
-    "spearman_rank_corr",
-    "top_event_paths",
-    "gdpr_erasure_audit",
-    "daily_user_accounting",
-    "quantile_two_pass",
-    "weighted_sample_topn",
-    "streaming_tumbling_rocksdb",
-    "version_cdc_feed",
-    "udtf_ngram_cols",
-    "arrow_token_stats",
-    "variant_props_agg",
-    "sql_scripting_pipeline",
-    "streaming_restart_exactly_once",
-    "xml_roundtrip",
-    "pandas_api_groupby",
-    "collated_segment_count",
-    "cogroup_asof_pandas",
-    "psi_price_drift",
-    "benford_digit_report",
-    "frequent_itemset_pairs",
-    "chisq_contingency",
-    "embedding_topk_filtered",
-    "concurrent_sessions_daily",
-    "rfm_segments",
-    "yoy_revenue_growth",
-    "table_checksum",
-    "cube_distinct_suppliers",
-    "sql_pipe_syntax",
-    "rolling_range_revenue",
-    # round-5 late additions (never driver-checked): gap-fill/LOCF,
-    # Pareto skyline, degree-ordered triangle census, quarantined JSON
-    # ingest, per-group OLS
-    "gapfill_daily_revenue",
-    "gapfill_interpolate",
-    "skyline_parts",
-    "triangle_count",
-    "cusum_changepoint",
-    "join_skew_report",
-    "activity_streaks",
-    "embedding_stats",
-    "heavy_hitters_exact",
-    "correlation_matrix_fast",
-    # round-5 new operators (never driver-checked): corpus boilerplate
-    # pair, SemDeDup, scalar-quantized ANN + its recall dial
-    "boilerplate_ngrams",
-    "boilerplate_coverage",
-    "semantic_dedup",
-    "embedding_topk_sq",
-    "sq_recall_at_k",
-    "bloom_filtered_join",
-    "schema_evolution_read",
-    "embedding_topk_pq",
-    "pq_recall_at_k",
-    "bpe_merge_train",
-    "bpe_encode_stats",
-    "k_anonymity_report",
-    "minhash_banded_pairs",
-    "embedding_topk_ivf_stored",
-    "correlation_matrix",
-    "ewma_daily_revenue",
-    "uniform_sample_n",
-    "groupwise_linreg",
-    "corrupt_tolerant_read",
-    # round-5 plan rewrites (newest = highest risk): the centroid-ANN
-    # family's zero-exchange literal assignment, the shuffle-hash
-    # PageRank, the versioned-manifest compaction, the NULL-normalized
-    # UDTF oracle, and the bounded_keys pipeline entry point
-    "dedup_canonical",
-    "time_travel_read",
-    "kmeans_assign_centroid",
-    "embedding_topk_ivf_kmeans",
-    "ivf_kmeans_recall_at_k",
-    "label_centroids",
-    "pagerank_top_nodes",
-    "compact_small_files",
-    "udtf_chunk_spans",
-    "multimodal_features",
-    "reference_parity_poc",
-    "http_dim_pipeline",
-    # oldest driver evidence (last green row is r1/r2) — entries change
-    # under the driver (fixture re-encodings, shared-helper rewrites), so
-    # stale green rows are its only blind spot; oldest first
-    "incremental_idempotence",
-    "streaming_tumbling_hour",
-    "streaming_session_window",
-    "scan_project_filter",
-    "conform_lowercase",
-    "regexp_extract_int",
-    "cast_and_roundtrip",
-    "surrogate_key_rows",
-    "union_source_tags",
-    "filter_watermark",
-    "watermark_max",
-    "distinct_union_keys",
-    "dedup_latest_wins",
-    "groupby_count_day",
-    "sort_topk",
-    "window_running",
-    "join_left_equi",
-    "join_left_composite",
-    "join_semi",
-    "join_anti",
-    "case_when_bucket",
-    "cte_sql_api",
-    "pivot_priority_counts",
-    "rollup_revenue",
-    "exact_dedup_hash",
-    "ngram_jaccard_pairs",
-    "embedding_topk_cosine",
-    "embedding_topk_pandas",
-    "lang_id_ngram",
-    "text_quality_score",
-    "token_counts",
-    "json_extract_props",
-    "window_tumbling_hour",
-    "window_sliding_halfhour",
-    "session_window_native",
-]
+# Without an evidence file the registry keeps its registration order.
 
 
 def _collect_sources(fn, seen: set[int], depth: int = 0) -> list[str]:
@@ -353,7 +213,7 @@ def entry_source_hash(name: str) -> str:
 def _evidence_order() -> list[str] | None:
     """Order from driver_evidence.json: (1) changed-or-never-checked,
     (2) the rest ascending by last driver-green round. None if the
-    evidence file is absent/unreadable (fall back to the static list).
+    evidence file is absent/unreadable (keep registration order).
 
     Cost: hashing all entries at import is ~0.45 s (measured) — paid once
     per process. Accepted: every consumer of this package starts a JVM
@@ -389,8 +249,7 @@ def _evidence_order() -> list[str] | None:
 def _apply_driver_priority() -> None:
     ordered = _evidence_order()
     if ordered is None:
-        ordered = [n for n in _DRIVER_PRIORITY if n in QUERIES]
-        ordered += [n for n in QUERIES if n not in set(ordered)]
+        return
     for mapping in (QUERIES, ORACLES):
         snapshot = {n: mapping[n] for n in ordered if n in mapping}
         mapping.clear()

@@ -14,6 +14,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# ORDER BY … LIMIT k with k at or above this plans as a sort, not an
+# in-memory top-k (see get_spark).
+TOPK_SORT_FALLBACK = 100_000
+
 
 def get_spark(
     app_name: str = "cocktailsdb-spark",
@@ -73,6 +77,13 @@ def get_spark(
         # class loader) plus ~5 KB of metaspace, so a full cache holds
         # ~60 MB — small next to the driver heap.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # ORDER BY … LIMIT k plans as TakeOrderedAndProject, whose per-task
+        # bounded priority queue is sized to k up front: k = 10^9 (a
+        # caller's "take everything") killed the driver JVM. At and above
+        # this threshold the same query plans as a full Sort under CollectLimit,
+        # which spills instead. Every registered top-k cut is far below it
+        # (the largest is LIMIT 1000).
+        .config("spark.sql.execution.topKSortFallbackThreshold", str(TOPK_SORT_FALLBACK))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

@@ -18,6 +18,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..conform import filter_after_watermark, union_by_name
 from ..schemas import WATERMARKS
 
 DEFAULT_MARK = dt.datetime(1900, 1, 1)  # reference default '1900-01-01'
@@ -64,15 +65,14 @@ def incremental_load(
     """One watermarked incremental run:
     read marks → strict-`>` filter per source (P9) → append sink →
     advance marks (A2 max per source), in THAT order. Returns rows loaded
-    per source. Re-running with unchanged inputs loads 0 rows (idempotence
-    test: tests/test_watermark.py)."""
+    per source. Re-running with unchanged inputs loads 0 rows (checked by
+    the ``incremental_idempotence`` registry entry)."""
     marks = store.read(spark)
     loaded: dict[str, int] = {}
     new_marks = dict(marks)
     filtered: list[DataFrame] = []
     for name, df in source_dfs.items():
-        wm = marks.get(name, DEFAULT_MARK)
-        inc = df.filter(F.col(ts_col) > F.lit(wm))
+        inc = filter_after_watermark(df, ts_col, marks.get(name, DEFAULT_MARK))
         # A2: new high-water mark = max ts of the incremental slice
         agg = inc.agg(
             F.max(ts_col).alias("mx"), F.count(F.lit(1)).alias("n")
@@ -81,10 +81,7 @@ def incremental_load(
         if agg["mx"] is not None:
             new_marks[name] = agg["mx"]
         filtered.append(inc.withColumn("_source", F.lit(name)))
-    out = filtered[0]
-    for d in filtered[1:]:
-        out = out.unionByName(d)
-    out.write.mode("append").parquet(sink_path)
+    union_by_name(filtered).write.mode("append").parquet(sink_path)
     # S10 fix: marks advance only after the sink committed
     store.write(spark, new_marks)
     return loaded

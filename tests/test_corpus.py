@@ -360,6 +360,27 @@ def test_uniform_sample_exact_size_and_deterministic(spark, sf_dir):
     assert not dropped or max_kept <= min(dropped)
 
 
+def test_uniform_sample_plan_falls_back_to_sort_above_topk_threshold(spark, sf_dir):
+    """TakeOrderedAndProject sizes a per-task buffer to its limit, so a
+    limit of 10**9 killed the JVM. At and above the session's fallback
+    threshold the top-k plans as a range-partitioned Sort under
+    CollectLimit; below it the bounded top-k plan stays."""
+    from cocktailsdb_spark.session import TOPK_SORT_FALLBACK
+    from cocktailsdb_spark.tables import load
+
+    docs = load(spark, sf_dir, "documents")
+
+    def plan(n: int) -> str:
+        return corpus.uniform_sample_n(docs, n=n)._jdf.queryExecution().executedPlan().toString()
+
+    for n in (50, TOPK_SORT_FALLBACK - 1):
+        assert f"TakeOrderedAndProject(limit={n}," in plan(n)
+    for n in (TOPK_SORT_FALLBACK, 10**9):
+        p = plan(n)
+        assert "TakeOrderedAndProject" not in p
+        assert f"CollectLimit {n}\n" in p and "Sort [sample_key" in p
+
+
 def test_heavy_hitters_matches_unbounded_topk(spark, sf_dir):
     from cocktailsdb_spark.operators.corpus import HH_CAPACITY, heavy_hitters
     from cocktailsdb_spark.operators.text import tokens

@@ -57,6 +57,55 @@ def test_rotation_prioritizes_changed_and_never_checked():
         assert rounds == sorted(rounds)
 
 
+def test_rotation_without_evidence_keeps_registration_order(tmp_path):
+    """With no driver_evidence.json beside the package, QUERIES and ORACLES
+    keep the order in which entries registered. The package is imported
+    from a copy that has no evidence file; a profile hook snapshots both
+    maps as ``_apply_driver_priority`` starts, i.e. right after the last
+    registration."""
+    import json
+    import shutil
+    import subprocess
+
+    from cocktailsdb_spark.registry import QUERIES
+
+    root = Path(__file__).resolve().parent.parent
+    shutil.copytree(
+        root / "cocktailsdb_spark",
+        tmp_path / "cocktailsdb_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    assert not (tmp_path / "driver_evidence.json").exists()
+    probe = """
+import json, sys
+seen = {}
+def hook(frame, event, arg):
+    if event == "call" and frame.f_code.co_name == "_apply_driver_priority":
+        g = frame.f_globals
+        seen["queries"], seen["oracles"] = list(g["QUERIES"]), list(g["ORACLES"])
+sys.setprofile(hook)
+from cocktailsdb_spark.registry import ORACLES, QUERIES
+sys.setprofile(None)
+print(json.dumps({"registered": seen, "queries": list(QUERIES), "oracles": list(ORACLES)}))
+"""
+    res = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    out = json.loads(res.stdout.strip().splitlines()[-1])
+    assert out["queries"] == out["registered"]["queries"]
+    assert out["oracles"] == out["registered"]["oracles"]
+    assert out["queries"][:2] == ["poc_analysis", "reference_parity_poc"]
+    # the evidence-driven order of this process is a different permutation
+    # of the same entries, so the comparison above is not vacuous
+    assert sorted(out["queries"]) == sorted(QUERIES)
+    assert out["queries"] != list(QUERIES)
+
+
 def test_entry_source_hash_is_deterministic():
     from cocktailsdb_spark.registry import QUERIES, entry_source_hash
 

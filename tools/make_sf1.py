@@ -10,15 +10,15 @@ does NOT break near-duplication: a one-token suffix leaves cross-replica
 Jaccard at ~n/(n+1), so minhash/Jaccard verified-pair output still grows
 ~quadratically in the replica count — a property of the replicated
 workload, not the plans. The scaling sweep therefore normalizes those two
-rows by output size (tools/neardup_pair_counts.py records pair counts and
-sec-per-1k-pairs; see BASELINE.md round-6).
+rows by output size (scaling_r6.json and scaling_r8.json "neardup_pairs"
+hold the pair counts and sec-per-1k-pairs; see BASELINE.md round-6).
 
 Embeddings ARE replicated since round 11 (they were fixed at 2,000
 vectors before, which left the at-rest ANN index lifecycle with no
 scaling axis): replica 0 keeps the original vectors — so the registered
 QUERY_IDS still reference unchanged query points — and every other
 replica perturbs each component with a deterministic md5-derived offset
-in [-0.05, 0.05) (the tools/ann_scale_probe.py scheme), so replicas are
+in [-0.05, 0.05) (the scheme behind scaling_r6.json "ann_100x"), so replicas are
 genuinely distinct points, not duplicate vectors that would collapse
 into ties.
 

@@ -1,12 +1,12 @@
-"""Round-15 optimization profiler.
+"""Per-query optimization profiler.
 
 Times individual registry queries under the bench's exact methodology
 (warm session, noop sink, best-of-N) and splits plan-build (Python →
 analyzed/optimized plan) from execution, so optimization targets the
-right layer. Optionally dumps explain("formatted") to plans/r15/.
+right layer. Optionally dumps explain("formatted") to plans/.
 
-    python tools/r15_profile.py --only a,b,c [--reps 3] [--explain before]
-    python tools/r15_profile.py --conf spark.sql.files.openCostInBytes=262144 --only ...
+    python tools/query_profile.py --only a,b,c [--reps 3] [--explain before]
+    python tools/query_profile.py --conf spark.sql.files.openCostInBytes=262144 --only ...
 """
 
 from __future__ import annotations
@@ -17,7 +17,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from cocktailsdb_spark.session import get_spark  # noqa: E402
@@ -29,7 +30,7 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--only", required=True)
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--explain", default=None, help="suffix: write plans/r15/<q>_<suffix>.txt")
+    ap.add_argument("--explain", default=None, help="suffix: write plans/<q>_<suffix>.txt")
     ap.add_argument("--conf", action="append", default=[], help="k=v session conf override")
     args = ap.parse_args()
 
@@ -37,7 +38,7 @@ def main() -> None:
     for kv in args.conf:
         k, v = kv.split("=", 1)
         extra[k] = v
-    spark = get_spark("r15_profile", extra_conf=extra)
+    spark = get_spark("query_profile", extra_conf=extra)
     for k, v in extra.items():
         spark.conf.set(k, v)  # getOrCreate may reuse an existing session
 
@@ -59,7 +60,7 @@ def main() -> None:
         for _ in range(2):
             queries[warm](spark, args.sf).write.mode("overwrite").format("noop").save()
 
-    plans_dir = Path(__file__).resolve().parent.parent / "plans" / "r15"
+    plans_dir = ROOT / "plans"
     out = {}
     for name in args.only.split(","):
         fn = queries[name]

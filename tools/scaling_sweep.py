@@ -6,7 +6,7 @@ than one — a plan hiding super-linear behavior shows its hand by sf10.
 
 Fixture prep (see tools/make_sf1.py for the replication + text-salting
 scheme — note salted replicas remain genuine NEAR-duplicates, so the two
-near-dup rows are output-bound; tools/neardup_pair_counts.py records the
+near-dup rows are output-bound; scaling_r8.json "neardup_pairs" holds the
 pair counts that normalize them):
 
     python tools/make_sf1.py --dst /tmp/cdbspark_sf1
