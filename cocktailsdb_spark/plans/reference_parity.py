@@ -40,6 +40,12 @@ BAR_DATA = f"{REF_DATA}/bar_data.csv"
 _CACHE_BASE = os.path.join(tempfile.gettempdir(), "cdbspark_refparity")
 
 
+def reference_data_present() -> bool:
+    """True when all four reference files exist. Only then can
+    ``reference_parity_poc`` build, and only then is its parity checked."""
+    return all(os.path.exists(p) for p in (BUDAPEST, LONDON, NY, BAR_DATA))
+
+
 def build_reference_database(spark: SparkSession) -> DataFrame:
     """Build (or incrementally re-run) the pipeline over the reference
     files; returns the materialized poc_analysis table."""

@@ -89,9 +89,11 @@ def test_registry_budget_snapshot(spark, sf_dir):
     planned Exchange count may exceed it — a lost broadcast anywhere in
     the registry fails here, not just in the hand-pinned headliners."""
     import json
+    import warnings
     from pathlib import Path
 
     from __spark_entry__ import queries
+    from cocktailsdb_spark.plans.reference_parity import reference_data_present
 
     snap = json.loads(
         (Path(__file__).resolve().parent.parent / "plan_budgets.json").read_text()
@@ -102,10 +104,18 @@ def test_registry_budget_snapshot(spark, sf_dir):
         f"entries with no recorded exchange budget: {missing} — run "
         "python tools/budget_snapshot.py"
     )
+    # reference_parity_poc reads the reference's own files, not sf_dir:
+    # where they are absent its plan cannot build, so its budget goes
+    # unchecked — named in a warning rather than reported as a build error
+    unchecked = [] if reference_data_present() else ["reference_parity_poc"]
+    if unchecked:
+        warnings.warn(f"exchange budget not checked (reference data absent): {unchecked}")
     over: list[str] = []
     errors: list[str] = []
     stale_errors: list[str] = []
     for name, fn in qs.items():
+        if name in unchecked:
+            continue
         rec = snap[name]
         if "error" in rec:
             # The snapshot recorded a plan-build error. Don't skip forever:
@@ -127,6 +137,6 @@ def test_registry_budget_snapshot(spark, sf_dir):
             continue
         if got > rec["exchanges"]:
             over.append(f"{name}: planned {got} > recorded {rec['exchanges']}")
-    assert not errors, errors
-    assert not stale_errors, "\n".join(stale_errors)
-    assert not over, "exchange budget regressions:\n" + "\n".join(over)
+    # one assertion: a build error must not hide a regression elsewhere
+    problems = errors + stale_errors + over
+    assert not problems, "\n".join(problems)

@@ -15,6 +15,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from cocktailsdb_spark.plans import bar_pipeline, reference_parity  # noqa: E402
 
+pytestmark = pytest.mark.skipif(
+    not reference_parity.reference_data_present(),
+    reason=f"reference data files absent under {reference_parity.REF_DATA}",
+)
+
 
 @pytest.fixture(scope="module")
 def ref_poc(spark):
