@@ -30,7 +30,7 @@ from ..operators.dedup import latest_wins
 from ..runlog import RunLog
 from ..sources import csv_sources
 from ..sources.http_source import Transport, bounded_keys, fetch_df, http_transport
-from ..sources.watermark import DEFAULT_MARK, WatermarkStore
+from ..sources.watermark import DEFAULT_MARK, WatermarkStore, advance_marks
 
 SOURCE_BARS = ("budapest", "london", "new york")
 
@@ -110,35 +110,39 @@ def process_sales_data(
     budapest_path: str,
     london_path: str,
     ny_path: str,
-    store: WatermarkStore,
-) -> tuple[DataFrame, dict]:
+    marks: dict,
+) -> tuple[DataFrame, dict, DataFrame]:
     """Stage 4 (build_database.py:95-168): three heterogeneous scans →
-    per-source bar tag (P8) + strict-> watermark filter (P9) + new-mark
-    computation (A2) → union (O3) → saleID (P3) → price double (P5) →
-    lowercase (P7).
+    per-source bar tag (P8) + strict-> watermark filter (P9) → union (O3)
+    → new marks for every source in one grouped job (A2) → saleID (P3) →
+    price double (P5) → lowercase (P7).
 
-    Returns (conformed sales, new marks). The CALLER writes the marks after
-    the sink commits — the §3.4 ordering fix."""
-    marks = store.read(spark)
+    Returns (conformed sales, new marks, pinned slice). The tagged,
+    filtered union is persisted lazily: the marks job fills it, and the
+    distinct-drink collect and the global_sales append read it, so each
+    source is scanned once per batch. The CALLER unpersists the slice on
+    every path — Spark's cache would otherwise serve a later run's
+    identical plan over the same directories, new files or not — and
+    writes the marks after the sink commits (the §3.4 ordering fix)."""
     sources = {
         "budapest": csv_sources.read_sales_iso_csv(spark, budapest_path),
         "london": csv_sources.read_sales_tsv_headerless(spark, london_path),
         "new york": csv_sources.read_sales_us_dates(spark, ny_path),
     }
-    new_marks = dict(marks)
-    frames = []
-    for bar, df in sources.items():
-        wm = marks.get(bar, DEFAULT_MARK)
-        inc = conform.filter_after_watermark(
-            conform.with_source_tag(df, "bar", bar), "dateOfSale", wm
+    inc = conform.union_by_name([
+        conform.filter_after_watermark(
+            conform.with_source_tag(df, "bar", bar), "dateOfSale",
+            marks.get(bar, DEFAULT_MARK),
         )
-        mx = inc.agg(F.max("dateOfSale")).first()[0]  # A2
-        if mx is not None:
-            new_marks[bar] = mx
-        frames.append(inc)
-    sales = conform.union_by_name(frames)
+        for bar, df in sources.items()
+    ]).persist()
+    try:
+        new_marks, _ = advance_marks(inc, "bar", "dateOfSale", marks)
+    except BaseException:
+        inc.unpersist()
+        raise
     sales = conform.add_surrogate_key(
-        sales.drop("idx"), "saleID", ["bar", "dateOfSale", "drink", "price"]
+        inc.drop("idx"), "saleID", ["bar", "dateOfSale", "drink", "price"]
     )
     sales = sales.withColumn("price", conform.cast_double("price"))
     return (
@@ -146,6 +150,7 @@ def process_sales_data(
             sales.select("saleID", "dateOfSale", "drink", "price", "bar")
         ),
         new_marks,
+        inc,
     )
 
 
@@ -244,31 +249,34 @@ def build_database(
     No-new-data runs short-circuit: when no source advanced its watermark
     (strict-`>` filter admitted zero rows everywhere) and all four tables
     already exist, the stored poc_analysis is returned without rewriting
-    anything — the incremental protocol's whole point."""
+    anything — the incremental protocol's whole point.
+
+    The marks are read once. The pinned sales slice (see
+    ``process_sales_data``) is released and the run log flushed on every
+    path: batch, short-circuit and failure."""
     store = WatermarkStore(os.path.join(base_dir, "last_update"))
     db = _ensure_bar_db(spark, base_dir)
     runlog = RunLog(os.path.join(base_dir, "run_history"))
-
-    with runlog.stage("sales_data"):
-        marks_before = store.read(spark)
-        sales, new_marks = process_sales_data(
-            spark, budapest_path, london_path, ny_path, store
-        )
-    if marks_before and new_marks == marks_before and all(
-        _attach_table(spark, db, t, base_dir)
-        for t in ("global_sales", "bar_stock", "cocktails", "poc_analysis")
-    ):
-        with runlog.stage("short_circuit", "no source advanced its watermark"):
-            result = spark.table(f"{db}.poc_analysis")
-        runlog.flush(spark)
-        return result
-
-    with runlog.stage("bar_data"):
-        stock = process_bar_data(spark, bar_data_path)
-    with runlog.stage("cocktail_dim"):
-        cocktails = query_cocktail_data(spark, sales, transport)
+    pinned = None
 
     try:
+        with runlog.stage("sales_data"):
+            marks_before = store.read(spark)
+            sales, new_marks, pinned = process_sales_data(
+                spark, budapest_path, london_path, ny_path, marks_before
+            )
+        if marks_before and new_marks == marks_before and all(
+            _attach_table(spark, db, t, base_dir)
+            for t in ("global_sales", "bar_stock", "cocktails", "poc_analysis")
+        ):
+            with runlog.stage("short_circuit", "no source advanced its watermark"):
+                return spark.table(f"{db}.poc_analysis")
+
+        with runlog.stage("bar_data"):
+            stock = process_bar_data(spark, bar_data_path)
+        with runlog.stage("cocktail_dim"):
+            cocktails = query_cocktail_data(spark, sales, transport)
+
         with runlog.stage("sinks"):
             _write_table(spark, sales, db, "global_sales", base_dir, append=True)  # S6
             _write_table(spark, stock, db, "bar_stock", base_dir, append=False)
@@ -291,5 +299,7 @@ def build_database(
             # S8 sink_ctas: CREATE TABLE AS with overwrite semantics
             _write_table(spark, poc, db, "poc_analysis", base_dir, append=False)
     finally:
+        if pinned is not None:
+            pinned.unpersist()
         runlog.flush(spark)  # a failed run still records what happened
     return spark.table(f"{db}.poc_analysis")

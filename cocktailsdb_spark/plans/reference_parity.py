@@ -46,15 +46,23 @@ def reference_data_present() -> bool:
     return all(os.path.exists(p) for p in (BUDAPEST, LONDON, NY, BAR_DATA))
 
 
-def build_reference_database(spark: SparkSession) -> DataFrame:
+def build_reference_database(
+    spark: SparkSession,
+    bar_data: str = BAR_DATA,
+    budapest: str = BUDAPEST,
+    london: str = LONDON,
+    ny: str = NY,
+    cache_base: str = _CACHE_BASE,
+) -> DataFrame:
     """Build (or incrementally re-run) the pipeline over the reference
-    files; returns the materialized poc_analysis table."""
-    marks_dir = os.path.join(_CACHE_BASE, "last_update")
-    if os.path.isdir(_CACHE_BASE) and not os.path.isdir(marks_dir):
-        shutil.rmtree(_CACHE_BASE)  # incomplete previous run
-    os.makedirs(_CACHE_BASE, exist_ok=True)
+    files — or over other files in the same formats, given their paths and
+    a cache dir of their own; returns the materialized poc_analysis table."""
+    marks_dir = os.path.join(cache_base, "last_update")
+    if os.path.isdir(cache_base) and not os.path.isdir(marks_dir):
+        shutil.rmtree(cache_base)  # incomplete previous run
+    os.makedirs(cache_base, exist_ok=True)
     return build_database(
-        spark, _CACHE_BASE, BAR_DATA, BUDAPEST, LONDON, NY,
+        spark, cache_base, bar_data, budapest, london, ny,
         transport=fake_transport,
     )
 

@@ -8,6 +8,9 @@ Events are buffered in memory per run and appended in ONE small write when
 the run closes, so logging never adds per-stage Spark jobs; a failed stage
 still flushes what happened (status='error' + the exception class), which
 is exactly the forensic record the reference's log provides after a crash.
+The flush builds its frame on the Arrow path (``frames.local_frame``), so
+it starts no Python worker; stage times are naive UTC wall-clock values,
+stored as process-local time like any naive datetime Spark is given.
 """
 
 from __future__ import annotations
@@ -18,6 +21,8 @@ import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .frames import local_frame
 
 log = logging.getLogger("cocktailsdb_spark")
 
@@ -63,7 +68,7 @@ class RunLog:
         single-file write — the control-table pattern of watermark.py)."""
         if not self._events:
             return
-        df = spark.createDataFrame(self._events, schema=RUN_HISTORY_SCHEMA)
+        df = local_frame(spark, self._events, RUN_HISTORY_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.path)
         self._events = []
 

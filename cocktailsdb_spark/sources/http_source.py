@@ -7,10 +7,11 @@ semantics but makes the transport injectable (tests/oracle runs use the
 deterministic fake below; no network) and adds retry.
 
 Scale posture: at 238 keys the fan-out belongs on the driver (a Spark job
-would be overhead); ``fetch_distributed`` is the mapInPandas variant for a
-large key set — each partition performs its own HTTP calls, so the fan-out
-parallelism equals the partition count and nothing funnels through the
-driver.
+would be overhead), and ``fetch_df`` hands the rows to Spark as an Arrow
+table (``frames.local_frame``), which starts no Python worker.
+``fetch_distributed`` is the mapInPandas variant for a large key set —
+each partition performs its own HTTP calls, so the fan-out parallelism
+equals the partition count and nothing funnels through the driver.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..frames import local_frame
 from ..schemas import COCKTAILS
 
 API_URL = "https://www.thecocktaildb.com/api/json/v1/1/search.php?s={key}"
@@ -120,8 +122,9 @@ def bounded_keys(df: DataFrame, col: str, cap: int = MAX_DRIVER_KEYS) -> list[st
 def fetch_df(
     spark: SparkSession, keys: Iterable[str], transport: Transport = http_transport
 ) -> DataFrame:
-    """S5 driver-side variant: collected distinct keys → rows → DataFrame."""
-    return spark.createDataFrame(fetch_rows(keys, transport), schema=COCKTAILS)
+    """S5 driver-side variant: collected distinct keys → rows → an
+    Arrow-built DataFrame."""
+    return local_frame(spark, fetch_rows(keys, transport), COCKTAILS)
 
 
 def fetch_distributed(

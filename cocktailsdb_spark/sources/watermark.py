@@ -3,8 +3,12 @@
 The reference keeps per-source high-water marks in a text file and — bug —
 advances them BEFORE the sink write (build_database.py:150-159 vs :250), so
 a crash in between loses data. This store fixes the ordering: marks are
-written only after the sink succeeds (call ``advance`` last). State lives in
-a small parquet control table — the direct analog of last_update.txt:1-3.
+written only after the sink succeeds (call ``write`` last). State lives in
+a small parquet control table — the direct analog of last_update.txt:1-3 —
+written from an Arrow-built frame (``frames.local_frame``), so a write
+starts no Python worker. Every source's new mark comes from ONE grouped
+job over the tagged incremental slice (``advance_marks``), not one job per
+source.
 
 The streaming mapping of the same protocol (checkpoint-backed
 ``withWatermark``) is in cocktailsdb_spark.streaming.
@@ -19,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..conform import filter_after_watermark, union_by_name
+from ..frames import local_frame
 from ..schemas import WATERMARKS
 
 DEFAULT_MARK = dt.datetime(1900, 1, 1)  # reference default '1900-01-01'
@@ -48,11 +53,26 @@ class WatermarkStore:
 
     def write(self, spark: SparkSession, marks: dict[str, dt.datetime]) -> None:
         """S10 — overwrite the control table. Call ONLY after the sink
-        committed (ordering fix per SURVEY.md §3.4)."""
-        df = spark.createDataFrame(
-            [(k, v) for k, v in sorted(marks.items())], schema=WATERMARKS
-        )
+        committed (ordering fix per SURVEY.md §3.4). Naive marks are
+        process-local time, as ``read`` returns them."""
+        df = local_frame(spark, sorted(marks.items()), WATERMARKS)
         df.coalesce(1).write.mode("overwrite").parquet(self.path)
+
+
+def advance_marks(
+    inc: DataFrame, source_col: str, ts_col: str, marks: dict[str, dt.datetime]
+) -> tuple[dict[str, dt.datetime], dict[str, int]]:
+    """A2 for every source in ONE grouped job over an incremental slice
+    tagged with ``source_col``: ``marks`` moved to each source's max
+    ``ts_col``, and the rows the slice holds per source. A source that
+    admitted no rows keeps its mark and is absent from the counts."""
+    rows = (
+        inc.groupBy(source_col)
+        .agg(F.max(ts_col).alias("mx"), F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    moved = {r[source_col]: r["mx"] for r in rows if r["mx"] is not None}
+    return {**marks, **moved}, {r[source_col]: r["n"] for r in rows}
 
 
 def incremental_load(
@@ -68,20 +88,16 @@ def incremental_load(
     per source. Re-running with unchanged inputs loads 0 rows (checked by
     the ``incremental_idempotence`` registry entry)."""
     marks = store.read(spark)
-    loaded: dict[str, int] = {}
-    new_marks = dict(marks)
-    filtered: list[DataFrame] = []
-    for name, df in source_dfs.items():
-        inc = filter_after_watermark(df, ts_col, marks.get(name, DEFAULT_MARK))
-        # A2: new high-water mark = max ts of the incremental slice
-        agg = inc.agg(
-            F.max(ts_col).alias("mx"), F.count(F.lit(1)).alias("n")
-        ).first()
-        loaded[name] = agg["n"]
-        if agg["mx"] is not None:
-            new_marks[name] = agg["mx"]
-        filtered.append(inc.withColumn("_source", F.lit(name)))
-    union_by_name(filtered).write.mode("append").parquet(sink_path)
+    tagged = union_by_name([
+        filter_after_watermark(df, ts_col, marks.get(name, DEFAULT_MARK))
+        .withColumn("_source", F.lit(name))
+        for name, df in source_dfs.items()
+    ]).persist()  # read by the marks job and the sink: scan the sources once
+    try:
+        new_marks, counts = advance_marks(tagged, "_source", ts_col, marks)
+        tagged.write.mode("append").parquet(sink_path)
+    finally:
+        tagged.unpersist()
     # S10 fix: marks advance only after the sink committed
     store.write(spark, new_marks)
-    return loaded
+    return {name: counts.get(name, 0) for name in source_dfs}

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import gzip
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -179,3 +180,111 @@ def test_strict_gt_watermark_new_rows_only(spark, built, bar_fixtures, tmp_path)
     kept = {r["strDrink"] for r in cocktails.select("strDrink").collect()}
     assert "mojito" in kept and "spritz" in kept
     assert cocktails.groupBy("idDrink").count().filter("count > 1").count() == 0
+
+
+# --- one pinned slice per batch: release, landing, job counts --------------
+
+
+def _sales_dirs(bar_fixtures, root) -> dict[str, str]:
+    """Each sales source as a directory holding its fixture file, so that a
+    later batch lands as one more file there."""
+    dirs = {}
+    for key in ("budapest", "london", "ny"):
+        d = root / key
+        d.mkdir()
+        shutil.copy(bar_fixtures[key], d / "part-0.csv.gz")
+        dirs[key] = str(d)
+    return dirs
+
+
+def _add_batch(dirs: dict[str, str], day: int) -> int:
+    """One more file per source, every row after the fixtures' marks;
+    returns the number of rows added."""
+    with gzip.open(os.path.join(dirs["budapest"], f"part-{day}.csv.gz"), "wt") as f:
+        f.write(",TS,ital,költség\n")
+        f.write(f"0,2021-01-{day:02d} 10:00:00,Mojito,3.5\n1,2021-01-{day:02d} 10:05:00,Spritz,6.0\n")
+    with gzip.open(os.path.join(dirs["london"], f"part-{day}.csv.gz"), "wt") as f:
+        f.write(f"0\t2021-01-{day:02d} 11:00:00\tNegroni\t4.0\n")
+    with gzip.open(os.path.join(dirs["ny"], f"part-{day}.csv.gz"), "wt") as f:
+        f.write(",time,drink,amount\n")
+        f.write(f"0,01-{day:02d}-2021 12:00,Paradise,5.0\n1,01-{day:02d}-2021 12:05,Daiquiri,5.5\n")
+    return 5
+
+
+def _build(spark, base, bar_data, dirs):
+    return bar_pipeline.build_database(
+        spark, base, bar_data, dirs["budapest"], dirs["london"], dirs["ny"],
+        transport=fake_transport,
+    )
+
+
+def _next_job(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_sales_slice_released_on_every_path(spark, bar_fixtures, tmp_path):
+    """The pinned sales slice leaves Spark's cache after a batch, after a
+    no-op (short-circuit) run and after a failing run; the failing run
+    still flushes its run log."""
+    from cocktailsdb_spark.runlog import RunLog
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # start from an empty cache
+    assert cache.isEmpty()
+    dirs = _sales_dirs(bar_fixtures, tmp_path)
+    base = str(tmp_path / "db")
+    _build(spark, base, bar_fixtures["bar_data"], dirs)
+    assert cache.isEmpty()
+    _build(spark, base, bar_fixtures["bar_data"], dirs)  # no-op re-run
+    assert cache.isEmpty()
+
+    failing = str(tmp_path / "db_failing")
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        _build(spark, failing, str(tmp_path / "no_such_bar_data.csv"), dirs)
+    assert cache.isEmpty()
+    hist = RunLog.history(spark, os.path.join(failing, "run_history")).collect()
+    assert sorted((r["stage"], r["status"]) for r in hist) == [
+        ("bar_data", "error"), ("sales_data", "ok"),
+    ]
+
+
+def test_batch_noop_batch_lands_every_row(spark, bar_fixtures, tmp_path):
+    """Batch → no-op → batch over directories that gain a file: every row
+    lands. A slice left pinned by the no-op run would be served again for
+    the second batch (same plan, same directories), which would then see
+    no new rows and short-circuit."""
+    dirs = _sales_dirs(bar_fixtures, tmp_path)
+    base = str(tmp_path / "db")
+    _build(spark, base, bar_fixtures["bar_data"], dirs)
+    _build(spark, base, bar_fixtures["bar_data"], dirs)
+    added = _add_batch(dirs, 2)
+    _build(spark, base, bar_fixtures["bar_data"], dirs)
+    sales = spark.read.parquet(os.path.join(base, "global_sales"))
+    assert sales.count() == 20 + 15 + 11 + added
+
+
+# Spark jobs of one steady batch and one no-op re-run (nextJobId delta) at
+# local[2] and local[4]. With one watermark-filter-and-max job per source
+# and the sales sources re-scanned by every reader, they were 25 and 9.
+STEADY_BATCH_JOBS = 21
+NOOP_RUN_JOBS = 3
+
+
+def test_steady_batch_and_noop_job_counts(spark, bar_fixtures, tmp_path):
+    """The no-op re-run reads the marks and scans each source once (the
+    marks job fills the pinned slice), then short-circuits; a batch adds
+    no job per source."""
+    dirs = _sales_dirs(bar_fixtures, tmp_path)
+    base = str(tmp_path / "db")
+    _build(spark, base, bar_fixtures["bar_data"], dirs).count()
+    _add_batch(dirs, 2)
+    _build(spark, base, bar_fixtures["bar_data"], dirs).count()  # warm the batch path
+    _add_batch(dirs, 3)
+    j0 = _next_job(spark)
+    _build(spark, base, bar_fixtures["bar_data"], dirs)
+    batch = _next_job(spark) - j0
+    j0 = _next_job(spark)
+    _build(spark, base, bar_fixtures["bar_data"], dirs)
+    noop = _next_job(spark) - j0
+    assert batch <= STEADY_BATCH_JOBS, f"steady batch ran {batch} jobs"
+    assert noop <= NOOP_RUN_JOBS, f"no-op re-run ran {noop} jobs"

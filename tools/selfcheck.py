@@ -3,6 +3,11 @@
 same SF, compare row count + column names + order-insensitive values.
 
 Usage: python tools/selfcheck.py [--sf /root/testdata/sf0.01] [--only name[,name]]
+
+``reference_parity_poc`` reads the reference's own data files, not ``--sf``.
+Where those files are absent it runs over seeded files in the same formats
+(perfbench/gen_bar.py), and its ledger row records ``"input": "generated"``
+and the seed.
 """
 
 from __future__ import annotations
@@ -10,6 +15,7 @@ from __future__ import annotations
 import argparse
 import datetime as dt
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -20,7 +26,7 @@ import pandas as pd
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from cocktailsdb_spark.plans.reference_parity import reference_data_present  # noqa: E402
+from cocktailsdb_spark.plans import reference_parity as rp  # noqa: E402
 from cocktailsdb_spark.session import get_spark  # noqa: E402
 from cocktailsdb_spark.tables import TABLES  # noqa: E402
 
@@ -52,6 +58,37 @@ def normalize(df: pd.DataFrame) -> list[tuple]:
     df = df.reindex(sorted(df.columns), axis=1)
     rows = [tuple(_cell(v) for v in row) for row in df.itertuples(index=False, name=None)]
     return sorted(rows)
+
+
+# reference_parity_poc's stand-in input where the reference files are absent
+GEN_SEED = 7
+GEN_ROWS_PER_BAR = (1_000, 200)  # an initial load, then one incremental batch
+
+
+def _generated_reference_poc(spark, work: str) -> tuple[pd.DataFrame, str]:
+    """``reference_parity_poc``'s own code path (``build_reference_database``)
+    over seeded inputs in the reference formats (perfbench/gen_bar.py: the
+    Hungarian-header CSV, the headerless TSV, ``MM-DD-YYYY`` dates, dirty
+    stock). One call per batch, so the second call runs the incremental
+    path. Returns the Spark result and the reference oracle SQL pointed at
+    the same files."""
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
+    from gen_bar import BarSources
+
+    src = BarSources(f"{work}/inputs", GEN_SEED)
+    for rows in GEN_ROWS_PER_BAR:
+        src.add_batch(rows)
+        sdf = rp.build_reference_database(
+            spark, *src.paths, cache_base=f"{work}/db"
+        ).toPandas()
+    bar_data, bud, lon, ny = src.paths
+    sql = (
+        rp.REFERENCE_POC_SQL.replace(rp.BAR_DATA, bar_data)
+        .replace(rp.BUDAPEST, f"{bud}/*.csv.gz")
+        .replace(rp.LONDON, f"{lon}/*.csv.gz")
+        .replace(rp.NY, f"{ny}/*.csv.gz")
+    )
+    return sdf, sql
 
 
 def main() -> int:
@@ -111,35 +148,38 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     only = set(args.only.split(",")) if args.only else None
     # reference_parity_poc reads the reference's own files, not --sf: where
-    # they are absent it is not run, and its ledger row keeps its last check
-    absent = set() if reference_data_present() else {"reference_parity_poc"}
+    # they are absent it runs over generated files in the same formats, and
+    # its ledger row says so
+    generated = set() if rp.reference_data_present() else {"reference_parity_poc"}
 
-    n_pass = n_fail = n_rows_only = n_skip = 0
+    n_pass = n_fail = n_rows_only = 0
     results: dict[str, dict] = {}
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        if name in absent:
-            print(f"skip  {name}: reference data absent")
-            n_skip += 1
-            continue
+        oracle = oracles.get(name)
         t0 = time.time()
         try:
-            sdf = fn(spark, args.sf).toPandas()
+            if name in generated:
+                # the oracle reads these files too; removed when main returns
+                work = tempfile.TemporaryDirectory(prefix="selfcheck_refgen_")
+                sdf, oracle = _generated_reference_poc(spark, work.name)
+            else:
+                sdf = fn(spark, args.sf).toPandas()
         except Exception as e:
             print(f"FAIL  {name}: SPARK ERROR {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1
             results[name] = {"status": "FAIL", "rows": 0}
             continue
         t_spark = time.time() - t0
-        if name not in oracles:
+        if oracle is None:
             print(f"rows  {name}: {len(sdf)} rows (rows-only, {t_spark:.1f}s)")
             n_rows_only += 1
             results[name] = {"status": "rows", "rows": len(sdf)}
             continue
         t0 = time.time()
         try:
-            odf = con.execute(oracles[name]).df()
+            odf = con.execute(oracle).df()
         except Exception as e:
             print(f"FAIL  {name}: DUCKDB ERROR {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1
@@ -164,16 +204,17 @@ def main() -> int:
             n_fail += 1
             results[name] = {"status": "FAIL", "rows": len(sdf)}
         else:
-            print(f"ok    {name}: {len(sdf)} rows (spark {t_spark:.1f}s, duckdb {t_duck:.1f}s)")
+            via = " on generated input" if name in generated else ""
+            print(f"ok    {name}: {len(sdf)} rows{via} (spark {t_spark:.1f}s, duckdb {t_duck:.1f}s)")
             n_pass += 1
             results[name] = {"status": "ok", "rows": len(sdf)}
 
-    print(f"\n{n_pass} ok, {n_rows_only} rows-only, {n_fail} FAIL, {n_skip} skipped")
-    _update_ledger(results, args.sf)
+    print(f"\n{n_pass} ok, {n_rows_only} rows-only, {n_fail} FAIL")
+    _update_ledger(results, args.sf, generated)
     return 1 if n_fail else 0
 
 
-def _update_ledger(results: dict[str, dict], sf: str) -> None:
+def _update_ledger(results: dict[str, dict], sf: str, generated: set[str]) -> None:
     """Merge this run's per-entry outcomes into selfcheck_ledger.json.
 
     The ledger is the committed record that EVERY registry entry has
@@ -184,7 +225,8 @@ def _update_ledger(results: dict[str, dict], sf: str) -> None:
     carries the entry's source hash at check time, so an entry edited
     after its last check fails the gate until re-checked — partial
     ``--only`` runs update just their entries, so the gate is satisfiable
-    incrementally without a full sweep per commit.
+    incrementally without a full sweep per commit. An entry in
+    ``generated`` ran on generated input, not at ``sf``; its row says so.
     """
     import json
 
@@ -195,11 +237,12 @@ def _update_ledger(results: dict[str, dict], sf: str) -> None:
     ledger = json.loads(path.read_text()) if path.exists() else {}
     for name, rec in results.items():
         ledger[name] = {
-            "status": rec["status"],
-            "rows": rec["rows"],
+            **rec,
             "sf": sf,
             "source_hash": entry_source_hash(name),
         }
+        if name in generated:
+            ledger[name].update(input="generated", seed=GEN_SEED, sf=None)
     path.write_text(json.dumps(ledger, indent=1, sort_keys=True) + "\n")
     print(f"ledger: {len(results)} entries updated -> {path.name}")
 
