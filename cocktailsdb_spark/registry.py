@@ -9,7 +9,12 @@ Keys with no oracle get rows-only checks (non-SQL-expressible ops).
 
 from __future__ import annotations
 
+import ast
+import hashlib
+import importlib.util
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -60,154 +65,148 @@ from . import registry_stats  # noqa: E402,F401
 # Rotation rule (round-5 judge directive 2): priority = entries whose
 # implementation CHANGED since their last driver-green row ∪ entries NEVER
 # driver-checked, then everything else oldest-evidence-first. Change
-# detection hashes each entry's plan-function source transitively
-# (package-internal helpers + constants it references) against the hash
-# recorded in driver_evidence.json when its last driver row landed —
-# maintained by `python tools/driver_rotation.py refresh` after each round.
+# detection hashes the source text of every package definition an entry
+# reaches (``entry_source_hash``) against the hash recorded in
+# driver_evidence.json when its last driver row landed — maintained by
+# `python tools/driver_rotation.py refresh` after each round.
 # Without an evidence file the registry keeps its registration order.
 
+_PKG_DIR = Path(__file__).resolve().parent
 
-def _collect_sources(fn, seen: set[int], depth: int = 0) -> list[str]:
-    """Source text of ``fn`` plus (transitively, depth ≤ 3) every
-    package-internal callable and simple constant it references — so a
-    rewrite of an operator helper re-prioritizes the registry entries that
-    call it, not just entries whose own wrapper changed."""
-    import inspect
+# module name -> (top-level statements by first line, top-level bindings),
+# filled on demand by _module and emptied after the import-time ordering
+_PARSED: dict[str, tuple[dict[int, list], dict[str, object]]] = {}
 
-    try:
-        out = [inspect.getsource(fn)]
-    except (OSError, TypeError):
-        # repr(fn) embeds the object's memory address → a different hash
-        # every process, permanently pinning the entry to the re-check
-        # front. Use a stable module-qualified identifier instead.
-        return [f"{getattr(fn, '__module__', '?')}.{getattr(fn, '__qualname__', repr(type(fn)))}"]
-    if depth >= 3:
-        return out
-    g = getattr(fn, "__globals__", {})
-    code = getattr(fn, "__code__", None)
-    names = list(code.co_names) if code is not None else []
-    # function-LOCAL imports (`from .operators import profiling` inside the
-    # body) bind nothing in __globals__ — resolve them from the source text
-    import importlib
-    import re
 
-    for m in re.finditer(r"from \.([\w.]*) import ([\w, ]+)", out[0]):
-        relmod, imported = m.groups()
-        try:
-            mod = importlib.import_module(
-                "cocktailsdb_spark" + ("." + relmod if relmod else "")
-            )
-        except ImportError:
-            continue
-        for nm in imported.split(","):
-            sub = getattr(mod, nm.strip().split(" as ")[0], None)
-            if inspect.ismodule(sub) and sub.__name__.startswith("cocktailsdb_spark"):
-                if id(sub) not in seen:
-                    seen.add(id(sub))
-                    out.extend(_module_members(sub, names, seen, depth))
-            elif (
-                callable(sub)
-                and (getattr(sub, "__module__", "") or "").startswith(
-                    "cocktailsdb_spark"
-                )
-                and id(sub) not in seen
-            ):
-                seen.add(id(sub))
-                out.extend(_collect_sources(sub, seen, depth + 1))
-    for name in names:
-        obj = g.get(name)
-        if obj is None:
-            continue
-        mod = getattr(obj, "__module__", None) or ""
-        if inspect.ismodule(obj) and obj.__name__.startswith("cocktailsdb_spark"):
-            out.extend(_module_members(obj, names, seen, depth))
-        elif callable(obj) and mod.startswith("cocktailsdb_spark"):
-            if id(obj) not in seen:
-                seen.add(id(obj))
-                out.extend(_collect_sources(obj, seen, depth + 1))
-        elif isinstance(obj, frozenset):
-            # sorted: set iteration order varies with hash randomization
-            out.append(f"{name}={sorted(map(repr, obj))!r}")
-        elif isinstance(obj, (str, int, float, tuple)):
-            out.append(f"{name}={obj!r}")
-        elif isinstance(obj, (dict, list)):
-            # runtime caches are STATE, not behavior: hashing their
-            # contents makes the entry hash drift as queries run in the
-            # same process (observed: _CENTROID_MEMO filling during a plan
-            # build flipped three entries to the re-check front mid-test).
-            # Convention: mutable module-level caches are named *_MEMO or
-            # *_CACHE and are excluded. The registry's own QUERIES/ORACLES
-            # maps are the same class of state: a plan function that calls
-            # any ``.register(...)`` attribute (e.g. spark.dataSource
-            # .register) picks up registry.register via co_names and would
-            # otherwise absorb the full entry map — flipping that entry's
-            # hash whenever ANY entry is added (observed:
-            # python_datasource_read drifted on every registration).
-            if name.endswith(("_MEMO", "_CACHE")) or name in ("QUERIES", "ORACLES"):
-                out.append(f"{name}=<runtime-cache>")
+def _source(name: str) -> tuple[Path, str] | None:
+    """File and package of a package module; None for any other name."""
+    if name != __package__ and not name.startswith(__package__ + "."):
+        return None
+    base = _PKG_DIR.joinpath(*name.split(".")[1:])
+    if (base / "__init__.py").is_file():
+        return base / "__init__.py", name
+    if base.with_suffix(".py").is_file():
+        return base.with_suffix(".py"), name.rpartition(".")[0]
+    return None
+
+
+def _module(name: str) -> tuple[dict[int, list], dict[str, object]]:
+    """Parse one package module once. Each top-level statement, keyed by its
+    first line (decorators included), holds its source text, the dotted
+    names used inside it, its own imports and, once resolved, the keys of
+    the statements it references. Each top-level name is bound to the keys
+    of the statements defining it, or to the package import it names."""
+    if name not in _PARSED:
+        path, package = _source(name)
+        source = path.read_text()
+        lines = source.splitlines(keepends=True)
+        stmts: dict[int, list] = {}
+        binds: dict[str, object] = {}
+        for node in ast.parse(source).body:
+            first = min(n.lineno for n in [node, *getattr(node, "decorator_list", [])])
+            text = "".join(lines[first - 1 : node.end_lineno])
+            used, imports = _uses(node, package)
+            stmts[first] = [text, used, imports, None]
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defined = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+                targets = getattr(node, "targets", [getattr(node, "target", None)])
+                defined = [
+                    n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)
+                ]
+            else:
+                binds.update(imports)
                 continue
-            # dict/list constants (e.g. LANG_STOPWORDS) are behavior too:
-            # editing one must flip the entry hash or the rotation never
-            # re-prioritizes the entry. json with sort_keys gives a stable
-            # serialization; the default must itself be process-stable —
-            # repr of a callable embeds a memory address and repr of a set
-            # iterates in hash-randomized order, either of which would pin
-            # the entry permanently to the re-check front.
-            import json as _json
+            for target in defined:
+                keys = binds.get(target)
+                binds[target] = (keys if isinstance(keys, list) else []) + [(name, first)]
+        _PARSED[name] = stmts, binds
+    return _PARSED[name]
 
-            def _stable_leaf(o):
-                if isinstance(o, (set, frozenset)):
-                    return sorted(map(repr, o))
-                if callable(o):
-                    return (
-                        f"{getattr(o, '__module__', '?')}."
-                        f"{getattr(o, '__qualname__', type(o).__name__)}"
-                    )
-                return f"<{type(o).__name__}>"
 
-            try:
-                out.append(
-                    f"{name}={_json.dumps(obj, sort_keys=True, default=_stable_leaf)}"
-                )
-            except (TypeError, ValueError):
-                out.append(f"{name}=<unserializable {type(obj).__name__}>")
+def _uses(node: ast.AST, package: str) -> tuple[set[tuple[str, ...]], dict]:
+    """The dotted names (``a`` or ``a.b.c``) used anywhere inside a
+    statement — nested defs, lambdas, comprehensions, defaults, decorators
+    — and the package imports it makes, function-local ones included."""
+    used: set[tuple[str, ...]] = set()
+    imports: dict[str, object] = {}
+    todo = [node]
+    while todo:
+        node = todo.pop()
+        chain: list[str] = []
+        while isinstance(node, ast.Attribute):
+            chain.append(node.attr)
+            node = node.value
+        if isinstance(node, ast.Name):
+            used.add((node.id, *reversed(chain)))
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            imports.update(_imports(node, package))
+        todo.extend(ast.iter_child_nodes(node))
+    return used, imports
+
+
+def _imports(node: ast.Import | ast.ImportFrom, package: str) -> dict[str, object]:
+    """Package-internal names an import binds: a module's name, or a
+    ``(module, attr)`` pair for ``from module import attr``."""
+    out: dict[str, object] = {}
+    if isinstance(node, ast.Import):
+        for a in node.names:
+            if _source(a.name):
+                top = a.name.partition(".")[0]
+                out[a.asname or top] = a.name if a.asname else top
+        return out
+    mod = importlib.util.resolve_name("." * node.level + (node.module or ""), package)
+    if _source(mod):
+        for a in node.names:
+            sub = f"{mod}.{a.name}"
+            out[a.asname or a.name] = sub if _source(sub) else (mod, a.name)
     return out
 
 
-def _module_members(mod, names: list[str], seen: set[int], depth: int) -> list[str]:
-    """Resolve the referenced attribute names against a package-internal
-    module, following nested-module chains (``operators.profiling.fn``)."""
-    import inspect
+def _lookup(mod: str, name: str, local: dict[str, object]):
+    """Statement keys or a package module's name that ``name`` is bound to
+    in ``mod`` (``local``, a statement's own imports, first); else None."""
+    bound = local.get(name) or _module(mod)[1].get(name)
+    return _lookup(*bound, {}) if isinstance(bound, tuple) else bound
 
-    out: list[str] = []
-    for attr in names:
-        sub = getattr(mod, attr, None)
-        if (
-            inspect.ismodule(sub)
-            and sub.__name__.startswith("cocktailsdb_spark")
-            and id(sub) not in seen
-        ):
-            seen.add(id(sub))
-            out.extend(_module_members(sub, names, seen, depth))
-        elif (
-            callable(sub)
-            and (getattr(sub, "__module__", "") or "").startswith("cocktailsdb_spark")
-            and id(sub) not in seen
-        ):
-            seen.add(id(sub))
-            out.extend(_collect_sources(sub, seen, depth + 1))
-    return out
+
+def _refs(key: tuple[str, int]) -> set[tuple[str, int]]:
+    """Keys of the package statements one statement references directly."""
+    mod, first = key
+    stmt = _module(mod)[0][first]
+    if stmt[3] is None:
+        refs: set[tuple[str, int]] = set()
+        for head, *attrs in stmt[1]:
+            target = _lookup(mod, head, stmt[2])
+            for attr in attrs:  # walk pkgmodule.attr chains
+                if not isinstance(target, str):
+                    break
+                sub = f"{target}.{attr}"
+                target = _lookup(target, attr, {}) or (sub if _source(sub) else None)
+            if isinstance(target, list):
+                refs.update(target)
+        stmt[3] = refs
+    return stmt[3]
 
 
 def entry_source_hash(name: str) -> str:
-    """Stable hash of an entry's implementation (plan fn + helpers +
-    constants + oracle SQL); drives the changed-since-last-driver-row
-    rotation in driver_evidence.json."""
-    import hashlib
-
-    parts = _collect_sources(QUERIES[name], seen=set())
-    parts.append(ORACLES.get(name, ""))
-    return hashlib.md5("\n".join(parts).encode()).hexdigest()
+    """Stable hash of an entry's implementation: the source text of every
+    package definition its plan function reaches, transitively, plus its
+    oracle SQL; drives the changed-since-last-driver-row rotation in
+    driver_evidence.json."""
+    fn = QUERIES[name]
+    mod, line = fn.__module__, fn.__code__.co_firstlineno
+    todo = [(mod, max(first for first in _module(mod)[0] if first <= line))]
+    seen = set(todo)
+    while todo:
+        for ref in _refs(todo.pop()):
+            if ref not in seen:
+                seen.add(ref)
+                todo.append(ref)
+    parts = sorted((m, _module(m)[0][first][0]) for m, first in seen)
+    blob = "\n".join([f"{m}\n{text}" for m, text in parts] + [ORACLES.get(name, "")])
+    return hashlib.md5(blob.encode()).hexdigest()
 
 
 def _evidence_order() -> list[str] | None:
@@ -215,14 +214,12 @@ def _evidence_order() -> list[str] | None:
     (2) the rest ascending by last driver-green round. None if the
     evidence file is absent/unreadable (keep registration order).
 
-    Cost: hashing all entries at import is ~0.45 s (measured) — paid once
-    per process. Accepted: every consumer of this package starts a JVM
+    Cost: parsing the package and hashing all entries at import is
+    ~0.8 s (median registry self-time of 6 ``python -X importtime`` runs,
+    4 vCPU) — paid once per process. Accepted: every consumer of this package starts a JVM
     whose startup dwarfs it, and the driver (the consumer the ordering
     exists for) cannot be detected from here."""
-    import json
-    from pathlib import Path
-
-    path = Path(__file__).resolve().parent.parent / "driver_evidence.json"
+    path = _PKG_DIR.parent / "driver_evidence.json"
     try:
         evidence = json.loads(path.read_text())
     except (OSError, ValueError):
@@ -257,3 +254,4 @@ def _apply_driver_priority() -> None:
 
 
 _apply_driver_priority()
+_PARSED.clear()  # later callers parse again; most processes never do

@@ -106,11 +106,102 @@ print(json.dumps({"registered": seen, "queries": list(QUERIES), "oracles": list(
     assert out["queries"] != list(QUERIES)
 
 
-def test_entry_source_hash_is_deterministic():
+def _fresh_hashes(cwd: Path, *names: str) -> dict[str, str]:
+    """``entry_source_hash`` of the given entries (default: all) computed by
+    a fresh interpreter that imports the package found in ``cwd``."""
+    import json
+    import subprocess
+
+    probe = (
+        "import json, sys\n"
+        "from cocktailsdb_spark.registry import QUERIES, entry_source_hash\n"
+        "print(json.dumps({n: entry_source_hash(n) for n in sys.argv[1:] or QUERIES}))\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", probe, *names],
+        cwd=cwd,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    return json.loads(res.stdout.strip().splitlines()[-1])
+
+
+def test_entry_source_hash_is_deterministic(spark):
+    """Entry hashes come from the code alone: a fresh process computes every
+    one of them as this process does after loading every sf0.01 table
+    (which fills ``tables._SCHEMAS``) and building the three entries that
+    fill ``similarity._CENTROID_MEMO``."""
+    from cocktailsdb_spark import tables
+    from cocktailsdb_spark.operators import similarity
     from cocktailsdb_spark.registry import QUERIES, entry_source_hash
 
-    for name in list(QUERIES)[:10]:
-        assert entry_source_hash(name) == entry_source_hash(name)
+    fresh = _fresh_hashes(Path(__file__).resolve().parent.parent)
+
+    sf = "/root/testdata/sf0.01"
+    for table in tables.TABLES:
+        tables.load(spark, sf, table)
+    for name in ("kmeans_assign_centroid", "embedding_topk_ivf_kmeans", "embedding_topk_pq"):
+        QUERIES[name](spark, sf).schema
+    assert tables._SCHEMAS, "loading no longer fills the schema memo"
+    assert similarity._CENTROID_MEMO, "building no longer fills the centroid memo"
+    here = {n: entry_source_hash(n) for n in QUERIES}
+    assert set(here) == set(fresh)
+    assert sorted(n for n in here if here[n] != fresh[n]) == []
+
+
+def _append_to_body(path: Path, fn: str) -> None:
+    """Add a ``pass`` as the last statement of top-level function ``fn``."""
+    import ast
+
+    lines = path.read_text().splitlines(keepends=True)
+    node = next(
+        n
+        for n in ast.parse("".join(lines)).body
+        if isinstance(n, ast.FunctionDef) and n.name == fn
+    )
+    lines.insert(node.end_lineno, " " * node.body[-1].col_offset + "pass\n")
+    path.write_text("".join(lines))
+
+
+def _set_constant(path: Path, name: str, value: str) -> None:
+    import re
+
+    text, n = re.subn(rf"^{name} = .*$", f"{name} = {value}", path.read_text(), flags=re.M)
+    assert n == 1, f"{name} is not assigned once at the top of {path.name}"
+    path.write_text(text)
+
+
+def test_helper_edits_move_the_entries_that_reach_them(tmp_path):
+    """An entry's hash covers the helpers and constants it reaches only from
+    a generator expression (``conform.filter_after_watermark``), a default
+    argument (``MAX_DRIVER_KEYS``) or a dict comprehension
+    (``tables.load``). Each edit is made in its own copy of the package,
+    whose hashes a subprocess computes; an entry that reaches none of the
+    edited definitions keeps its hash, so the copies hash like the repo."""
+    import shutil
+
+    from cocktailsdb_spark.registry import entry_source_hash
+
+    root = Path(__file__).resolve().parent.parent
+    control = "python_datasource_read"
+    edits = [
+        ("incremental_idempotence", _append_to_body, "conform.py", "filter_after_watermark"),
+        ("http_dim_pipeline", _set_constant, "sources/http_source.py", "MAX_DRIVER_KEYS", "10"),
+        ("column_entropy", _append_to_body, "tables.py", "load"),
+    ]
+    for i, (entry, edit, rel, *args) in enumerate(edits):
+        copy = tmp_path / str(i)
+        shutil.copytree(
+            root / "cocktailsdb_spark",
+            copy / "cocktailsdb_spark",
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+        edit(copy / "cocktailsdb_spark" / rel, *args)
+        edited = _fresh_hashes(copy, entry, control)
+        assert edited[control] == entry_source_hash(control)
+        assert edited[entry] != entry_source_hash(entry), f"{rel}: {args} edit missed {entry}"
 
 
 def test_entry_source_hash_ignores_runtime_cache_state(spark, sf_dir):

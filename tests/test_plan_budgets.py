@@ -89,11 +89,12 @@ def test_registry_budget_snapshot(spark, sf_dir):
     planned Exchange count may exceed it — a lost broadcast anywhere in
     the registry fails here, not just in the hand-pinned headliners."""
     import json
-    import warnings
+    import tempfile
     from pathlib import Path
 
     from __spark_entry__ import queries
     from cocktailsdb_spark.plans.reference_parity import reference_data_present
+    from tools.selfcheck import _generated_reference_poc
 
     snap = json.loads(
         (Path(__file__).resolve().parent.parent / "plan_budgets.json").read_text()
@@ -104,18 +105,18 @@ def test_registry_budget_snapshot(spark, sf_dir):
         f"entries with no recorded exchange budget: {missing} — run "
         "python tools/budget_snapshot.py"
     )
-    # reference_parity_poc reads the reference's own files, not sf_dir:
-    # where they are absent its plan cannot build, so its budget goes
-    # unchecked — named in a warning rather than reported as a build error
-    unchecked = [] if reference_data_present() else ["reference_parity_poc"]
-    if unchecked:
-        warnings.warn(f"exchange budget not checked (reference data absent): {unchecked}")
+    work = tempfile.TemporaryDirectory(prefix="budget_refgen_")
+    if not reference_data_present():
+        # reference_parity_poc reads the reference's own files, not sf_dir:
+        # where they are absent it is built over the seeded generated inputs
+        # that tools/selfcheck.py checks it on
+        qs["reference_parity_poc"] = (
+            lambda spark, sf_dir: _generated_reference_poc(spark, work.name)[0]
+        )
     over: list[str] = []
     errors: list[str] = []
     stale_errors: list[str] = []
     for name, fn in qs.items():
-        if name in unchecked:
-            continue
         rec = snap[name]
         if "error" in rec:
             # The snapshot recorded a plan-build error. Don't skip forever:
@@ -137,6 +138,7 @@ def test_registry_budget_snapshot(spark, sf_dir):
             continue
         if got > rec["exchanges"]:
             over.append(f"{name}: planned {got} > recorded {rec['exchanges']}")
+    work.cleanup()
     # one assertion: a build error must not hide a regression elsewhere
     problems = errors + stale_errors + over
     assert not problems, "\n".join(problems)

@@ -5,11 +5,12 @@ registration order. The rotation rule is: priority goes to entries whose
 implementation CHANGED since their last driver-green row, plus entries
 NEVER driver-checked, then everything else oldest-evidence-first.
 
-"Changed" is detected by hashing each entry's plan-function source plus
-its oracle SQL. ``driver_evidence.json`` (committed at the repo root)
-records, per entry, the last driver round with a full-pass row and the
-source hash captured when that evidence was last refreshed. At import
-time ``cocktailsdb_spark.registry`` consults this file to order QUERIES.
+"Changed" is detected by ``registry.entry_source_hash``: the source text
+of every package definition an entry reaches, plus its oracle SQL.
+``driver_evidence.json`` (committed at the repo root) records, per entry,
+the last driver round with a full-pass row and the source hash captured
+when that evidence was last refreshed. At import time
+``cocktailsdb_spark.registry`` consults this file to order QUERIES.
 
 Regenerate after each round lands its CORRECTNESS_r{N}.json:
 

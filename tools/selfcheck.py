@@ -22,6 +22,7 @@ from pathlib import Path
 import duckdb
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -65,22 +66,20 @@ GEN_SEED = 7
 GEN_ROWS_PER_BAR = (1_000, 200)  # an initial load, then one incremental batch
 
 
-def _generated_reference_poc(spark, work: str) -> tuple[pd.DataFrame, str]:
+def _generated_reference_poc(spark, work: str) -> tuple[DataFrame, str]:
     """``reference_parity_poc``'s own code path (``build_reference_database``)
     over seeded inputs in the reference formats (perfbench/gen_bar.py: the
     Hungarian-header CSV, the headerless TSV, ``MM-DD-YYYY`` dates, dirty
     stock). One call per batch, so the second call runs the incremental
-    path. Returns the Spark result and the reference oracle SQL pointed at
-    the same files."""
+    path. Returns the result (a table under ``work``) and the reference
+    oracle SQL pointed at the same files."""
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
     from gen_bar import BarSources
 
     src = BarSources(f"{work}/inputs", GEN_SEED)
     for rows in GEN_ROWS_PER_BAR:
         src.add_batch(rows)
-        sdf = rp.build_reference_database(
-            spark, *src.paths, cache_base=f"{work}/db"
-        ).toPandas()
+        sdf = rp.build_reference_database(spark, *src.paths, cache_base=f"{work}/db")
     bar_data, bud, lon, ny = src.paths
     sql = (
         rp.REFERENCE_POC_SQL.replace(rp.BAR_DATA, bar_data)
@@ -164,6 +163,7 @@ def main() -> int:
                 # the oracle reads these files too; removed when main returns
                 work = tempfile.TemporaryDirectory(prefix="selfcheck_refgen_")
                 sdf, oracle = _generated_reference_poc(spark, work.name)
+                sdf = sdf.toPandas()
             else:
                 sdf = fn(spark, args.sf).toPandas()
         except Exception as e:
