@@ -17,11 +17,11 @@ Scale posture (the 100 TB question for each op):
 
 - ``classifier_eval_report`` — ONE map-side-combined aggregate; pure
   reduction, no join, no window.
-- ``roc_auc`` — rank-free (the mann_whitney_u histogram template,
-  relational.py): a score-distinct aggregate, then a two-pass bucketed
-  prefix sum over ``floor(p·100)`` buckets (≤ 101 buckets at any corpus
-  size), so no task ever sorts more than one bucket of distinct scores
-  and ranks never materialise per row.
+- ``roc_auc`` — rank-free (as ``relational.mann_whitney_u``): a
+  score-distinct aggregate, then ``relational.bucketed_prefix`` over
+  ``floor(p·100)`` buckets (≤ 101 buckets at any corpus size), so no
+  task ever sorts more than one bucket of distinct scores and ranks
+  never materialise per row.
 - ``calibration_bins`` — one aggregate over ≤ EVAL_CAL_BINS fixed-width
   score bins.
 - ``gains_lift_table`` — calibration bins plus a window over the
@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..numeric import dsum, qround
+from .relational import bucketed_prefix
 from .text import tokens
 
 EVAL_LABEL_LANG = "en"
@@ -115,11 +116,10 @@ def roc_auc(docs: DataFrame) -> DataFrame:
         2·R_pos = Σ_v cp(v) · (2·cum_lt(v) + t(v) + 1)
         AUC     = (2·R_pos − 2·P(P+1)/2) / (2·P·N)
 
-    cum_lt comes from the mann_whitney_u two-pass bucketed prefix sum
-    (relational.py:1406): per-bucket totals (≤ 101 buckets since p is
-    quantized into [0,1]), exclusive bucket prefix via a broadcast
-    self-join, then a within-bucket rows-frame window over distinct
-    scores — no unpartitioned data-sized sort anywhere. All rank
+    cum_lt comes from ``relational.bucketed_prefix`` over ≤ 101 buckets
+    (p is quantized into [0,1]) — no unpartitioned data-sized sort
+    anywhere. The score-distinct frame feeds both of its passes, so it
+    is pinned there once instead of tokenizing the corpus twice. All rank
     arithmetic is exact integers (decimal-summed against overflow);
     the one division happens on the final scalar row.
     """
@@ -135,23 +135,8 @@ def roc_auc(docs: DataFrame) -> DataFrame:
             "bucket", F.floor(F.col("v") * F.lit(float(AUC_BUCKET_SCALE)))
         )
     )
-    buckets = vals.groupBy("bucket").agg(F.sum("t").alias("bt"))
-    prev = F.broadcast(
-        buckets.select(F.col("bucket").alias("pb"), F.col("bt").alias("pt"))
-    )
-    offsets = (
-        buckets.join(prev, F.col("pb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(F.coalesce(F.sum("pt"), F.lit(0)).alias("off"))
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = vals.join(F.broadcast(offsets), "bucket").withColumn(
-        "cum_lt",
-        F.col("off") + F.coalesce(F.sum("t").over(w_in), F.lit(0)),
+    ranked = bucketed_prefix(vals, "v", ("t",)).withColumn(
+        "cum_lt", F.col("cum_t") - F.col("t")
     )
     big = "decimal(38,0)"
     agg = ranked.agg(

@@ -339,7 +339,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     )
     from ..numeric import qround
 
-    return (
+    out = (
         nodes_wedges.crossJoin(base)
         .crossJoin(tri)
         .select(
@@ -351,7 +351,13 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
                 F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges"), 9
             ).alias("global_clustering"),
         )
+        # pin the one-row result so the canon/deg caches can be released
+        # before the caller consumes the frame (pagerank's convention)
+        .localCheckpoint()
     )
+    canon.unpersist()
+    deg.unpersist()
+    return out
 
 
 BFS_MAX_HOPS = 6

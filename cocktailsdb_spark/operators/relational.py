@@ -10,6 +10,8 @@ DataFrame plan; determinism notes per function.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -844,6 +846,145 @@ def spearman_rank_corr_scaled(lineitem: DataFrame) -> DataFrame:
     )
 
 
+def bucketed_prefix(
+    vals: DataFrame,
+    order: str | list[str],
+    counts: tuple[str, ...],
+    group: tuple[str, ...] = (),
+) -> DataFrame:
+    """Exact running totals of integer count columns with no group-wide
+    sort: the two-pass bucketed prefix sum behind every rank-free
+    statistic here (Mann–Whitney U, Kruskal–Wallis, both KS tests,
+    Anderson–Darling, Gini, Brown–Forsythe, PERCENTILE_CONT, the
+    conformal order statistic and ``evaluation.roc_auc``).
+
+    ``vals`` carries a ``bucket`` column, a monotone integer function of
+    the ``order`` key so that bucket order is value order, plus the
+    ``counts`` columns. Pass 1 sums each count per (group, bucket) — a
+    histogram bounded by the bucket grid, not by the data — and joins
+    it to itself within the group as a broadcast square: the sum over
+    earlier buckets is each bucket's offset, the sum over all of them the
+    group's total. Pass 2 is a rows-frame window inside each
+    (group, bucket) ordered by ``order``, so no task ever sorts more than
+    one bucket and no unpartitioned window exists. Every sum is over
+    integers, so the result is exact at any size.
+
+    Returns each ``vals`` row with, per count column ``c``, ``cum_<c>``
+    (its inclusive running total in ``order`` within its group; the
+    exclusive ``cum_lt`` is ``cum_<c> - c``) and ``n_<c>`` (the group's
+    total). ``vals`` feeds both passes, so it is pinned here, once; it is
+    sized by distinct values, not by rows (cluster form: a persisted
+    table at the same cut point).
+    """
+    vals = vals.localCheckpoint()
+    keys = [*group, "bucket"]
+    buckets = vals.groupBy(*keys).agg(*[F.sum(c).alias(f"b_{c}") for c in counts])
+    prev = buckets.select(
+        *group,
+        F.col("bucket").alias("pb"),
+        *[F.col(f"b_{c}").alias(f"p_{c}") for c in counts],
+    )
+    # every bucket pair within a group (a cross join when there is none)
+    square = buckets.join(F.broadcast(prev), list(group) or None)
+    earlier = F.col("pb") < F.col("bucket")
+    offsets = square.groupBy(*keys).agg(
+        *[
+            F.coalesce(F.sum(F.when(earlier, F.col(f"p_{c}"))), F.lit(0)).alias(
+                f"off_{c}"
+            )
+            for c in counts
+        ],
+        *[F.sum(f"p_{c}").alias(f"n_{c}") for c in counts],
+    )
+    w_in = (
+        Window.partitionBy(*keys)
+        .orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return vals.join(F.broadcast(offsets), keys).select(
+        *vals.columns,
+        *[(F.col(f"off_{c}") + F.sum(c).over(w_in)).alias(f"cum_{c}") for c in counts],
+        *[f"n_{c}" for c in counts],
+    )
+
+
+def type1_rank(q: float) -> Column:
+    """The type-1 order statistic floor(q·(n−1))+1 of a group of size
+    ``n`` (the repo's quantile_disc convention)."""
+    return F.floor(F.lit(q) * (F.col("n") - 1)).cast("long") + 1
+
+
+def histogram_quantiles(
+    rows: DataFrame,
+    group: str,
+    bucket: Column,
+    order: list[str],
+    qs: tuple[float, ...],
+    rank: Callable[[float], Column],
+) -> DataFrame:
+    """Exact per-group order statistics without a per-group full sort —
+    the histogram-narrowing algorithm every warehouse uses when groups
+    are too big to sort (BigQuery/Presto exact-percentile shape).
+
+    Pass 1 counts ``rows`` per (group, ``bucket``) — one map-side-combined
+    shuffle whose output is histogram-sized, not data-sized. The
+    cumulative bucket counts (a window over the histogram frame) locate,
+    per group and quantile, WHICH bucket holds the target rank
+    ``rank(q)`` — a Column over the group size ``n`` — and the offset
+    inside it. Pass 2 ranks ONLY the selected buckets in ``order``, so
+    the window runs on ~n/n_buckets rows. ``bucket`` must be a monotone
+    function of the first ``order`` key: equal values then share a
+    bucket, so global rank = cumulative-previous + in-bucket rank is
+    exact.
+
+    Returns one row per (group, q): the ``rows`` row at that rank, with
+    ``q`` and the group size ``n``.
+    """
+    hist = rows.groupBy(group, bucket.alias("bucket")).agg(F.count("*").alias("c"))
+    wb = (
+        Window.partitionBy(group)
+        .orderBy("bucket")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    # histogram-sized (≤ groups × buckets rows) — materialize ONCE: the
+    # per-q selection branches and the pass-2 bucket list each replan this
+    # subtree, which would re-run the data-sized histogram aggregate
+    # len(qs)+1 times
+    cum = hist.select(
+        group,
+        "bucket",
+        "c",
+        F.coalesce(F.sum("c").over(wb), F.lit(0)).alias("cum_prev"),
+        F.sum("c").over(Window.partitionBy(group)).alias("n"),
+    ).localCheckpoint()
+    # selection rows: one per (group, q) — which bucket, which offset
+    sel = None
+    for q in qs:
+        k = rank(q)
+        s = cum.filter(
+            (k > F.col("cum_prev")) & (k <= F.col("cum_prev") + F.col("c"))
+        ).select(
+            group,
+            F.lit(q).alias("q"),
+            "bucket",
+            (k - F.col("cum_prev")).alias("offset"),
+            "n",
+        )
+        sel = s if sel is None else sel.unionByName(s)
+    # pass 2: rank only the selected buckets (≈ n / n_buckets rows each)
+    wanted = sel.select(group, "bucket").distinct()
+    narrowed = rows.withColumn("bucket", bucket).join(
+        F.broadcast(wanted), [group, "bucket"]
+    )
+    wl = Window.partitionBy(group, "bucket").orderBy(order)
+    return (
+        narrowed.withColumn("lrank", F.row_number().over(wl).cast("long"))
+        .join(F.broadcast(sel), [group, "bucket"])
+        .filter(F.col("lrank") == F.col("offset"))
+        .drop("bucket", "lrank", "offset")
+    )
+
+
 QTP_BUCKETS = 1024
 QTP_DOMAIN = (0.0, 600000.0)  # o_totalprice domain; prod: first-pass sample
 
@@ -854,20 +995,11 @@ def quantile_two_pass(
     n_buckets: int = QTP_BUCKETS,
     domain: tuple[float, float] = QTP_DOMAIN,
 ) -> DataFrame:
-    """EXACT per-group quantiles without a per-group full sort — the
-    histogram-narrowing algorithm every warehouse uses when groups are
-    too big to sort (BigQuery/Presto exact-percentile shape):
-
-    Pass 1 aggregates (group, bucket) counts over a fixed value grid —
-    one map-side-combined shuffle whose output is histogram-sized, not
-    data-sized. The cumulative bucket counts then locate, per group and
-    quantile, WHICH bucket holds the target rank and the residual offset
-    inside it (window over the histogram frame — ≤ groups × n_buckets
-    rows). Pass 2 sorts ONLY the selected buckets: the per-group window
-    now runs on ~n/n_buckets rows, and equal values always share a
-    bucket, so global rank = cumulative-previous + in-bucket rank is
-    exact. Output identical to :func:`quantile_disc` (same type-1
-    definition, same oracle) — green hash proves narrowing ≡ naive sort.
+    """EXACT per-priority quantiles of ``o_totalprice`` without a
+    per-group full sort: :func:`histogram_quantiles` over a fixed
+    ``n_buckets`` value grid, ranking ties by order key. Output identical
+    to :func:`quantile_disc` (same type-1 definition, same oracle) —
+    green hash proves narrowing ≡ naive sort.
     The fixed ``domain`` stands in for the sampling pre-pass a production
     run uses to pick the grid.
     """
@@ -879,61 +1011,15 @@ def quantile_two_pass(
             F.lit(0), F.floor((F.col("o_totalprice") - lo) / width).cast("int")
         ),
     )
-    hist = (
-        orders.groupBy(
-            "o_orderpriority", bucket.alias("bucket")
-        ).agg(F.count("*").alias("c"))
-    )
-    wb = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wn = Window.partitionBy("o_orderpriority")
-    # histogram-sized (≤ groups × n_buckets rows) — materialize ONCE: the
-    # per-q selection branches and the pass-2 bucket list each replan this
-    # subtree, which would re-run the data-sized histogram aggregate
-    # len(qs)+1 times (same fix as rfm_segments_scaled / spearman's triples)
-    cum = hist.select(
+    picked = histogram_quantiles(
+        orders.select("o_orderpriority", "o_totalprice", "o_orderkey"),
         "o_orderpriority",
-        "bucket",
-        "c",
-        F.coalesce(F.sum("c").over(wb), F.lit(0)).alias("cum_prev"),
-        F.sum("c").over(wn).alias("n"),
-    ).localCheckpoint()
-    # selection rows: one per (group, q) — which bucket, which offset
-    sels = []
-    for q in qs:
-        k = F.floor(F.lit(q) * (F.col("n") - 1)).cast("long") + 1
-        sels.append(
-            cum.filter((k > F.col("cum_prev")) & (k <= F.col("cum_prev") + F.col("c")))
-            .select(
-                "o_orderpriority",
-                F.lit(q).alias("q"),
-                "bucket",
-                (k - F.col("cum_prev")).alias("offset"),
-            )
-        )
-    sel = sels[0]
-    for s in sels[1:]:
-        sel = sel.unionByName(s)
-    # pass 2: sort only the selected buckets (≈ n / n_buckets rows each)
-    wanted = sel.select("o_orderpriority", "bucket").distinct()
-    narrowed = orders.select(
-        "o_orderpriority",
-        "o_totalprice",
-        "o_orderkey",
-        bucket.alias("bucket"),
-    ).join(F.broadcast(wanted), ["o_orderpriority", "bucket"])
-    wl = Window.partitionBy("o_orderpriority", "bucket").orderBy(
-        "o_totalprice", "o_orderkey"
+        bucket,
+        ["o_totalprice", "o_orderkey"],
+        qs,
+        type1_rank,
     )
-    local = narrowed.withColumn("lrank", F.row_number().over(wl).cast("long"))
-    picked = local.join(
-        F.broadcast(sel),
-        ["o_orderpriority", "bucket"],
-    ).filter(F.col("lrank") == F.col("offset"))
-    out = picked.groupBy("o_orderpriority").agg(
+    return picked.groupBy("o_orderpriority").agg(
         *[
             F.max(
                 F.when(F.col("q") == q, F.col("o_totalprice"))
@@ -941,8 +1027,6 @@ def quantile_two_pass(
             for q in qs
         ]
     )
-    return out
-
 
 FI_MIN_SUPPORT = 3
 FI_TOP_N = 30
@@ -1131,8 +1215,8 @@ def rfm_segments_scaled(
     domains: dict[str, tuple[float, float]] | None = None,
 ) -> DataFrame:
     """:func:`rfm_segments` at scale — quintile CUTOFFS via the two-pass
-    histogram narrowing (:func:`quantile_two_pass`'s algorithm, run for
-    all three dimensions in ONE partitioned frame keyed by ``dim``), then
+    histogram narrowing (:func:`histogram_quantiles`, run for all three
+    dimensions in ONE partitioned frame keyed by ``dim``), then
     scoring as a narrow broadcast map. Zero unpartitioned windows: the
     cumulative-histogram and in-bucket-rank windows partition on ``dim``
     / ``(dim, bucket)``, so nothing ever sorts more than a histogram or
@@ -1178,49 +1262,8 @@ def rfm_segments_scaled(
         F.lit(n_buckets - 1),
         F.greatest(F.lit(0), F.floor((F.col("value") - lo_e) / w_e).cast("int")),
     )
-    hist = stacked.groupBy("dim", bucket.alias("bucket")).agg(F.count("*").alias("c"))
-    wb = (
-        Window.partitionBy("dim")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wn = Window.partitionBy("dim")
-    # histogram-sized (≤ 3 · n_buckets rows) — materialize ONCE: the q
-    # selection filters and the pass-2 bucket list each replan this
-    # subtree, which would re-run the data-sized histogram aggregate
-    # len(qs)+1 times (same fix as simhash's fingerprint checkpoint)
-    cum = hist.select(
-        "dim",
-        "bucket",
-        "c",
-        F.coalesce(F.sum("c").over(wb), F.lit(0)).alias("cum_prev"),
-        F.sum("c").over(wn).alias("n"),
-    ).localCheckpoint()
-    sels = []
-    for q in qs:
-        k = F.floor(F.lit(q) * (F.col("n") - 1)).cast("long") + 1
-        sels.append(
-            cum.filter((k > F.col("cum_prev")) & (k <= F.col("cum_prev") + F.col("c")))
-            .select(
-                "dim",
-                F.lit(q).alias("q"),
-                "bucket",
-                (k - F.col("cum_prev")).alias("offset"),
-            )
-        )
-    sel = sels[0]
-    for s in sels[1:]:
-        sel = sel.unionByName(s)
-    wanted = sel.select("dim", "bucket").distinct()
-    narrowed = stacked.withColumn("bucket", bucket).join(
-        F.broadcast(wanted), ["dim", "bucket"]
-    )
-    wl = Window.partitionBy("dim", "bucket").orderBy("value", "o_custkey")
-    picked = (
-        narrowed.withColumn("lrank", F.row_number().over(wl).cast("long"))
-        .join(F.broadcast(sel), ["dim", "bucket"])
-        .filter(F.col("lrank") == F.col("offset"))
-        .select("dim", "q", "value")
+    picked = histogram_quantiles(
+        stacked, "dim", bucket, ["value", "o_custkey"], qs, type1_rank
     )
     cuts = picked.groupBy().agg(
         *[
@@ -1385,11 +1428,9 @@ def mann_whitney_u(orders: DataFrame) -> DataFrame:
     Rank-free at scale (the spearman_rank_corr_scaled histogram trick,
     specialised): ranks never materialise per row. One data-sized
     map-side-combined aggregate builds the distinct-value frame
-    (price → per-group counts); global cumulative counts come from a
-    two-pass bucketed prefix sum — a tiny fixed-width bucket histogram
-    (≤ ~1,000 rows at any corpus size for TPC-H price ranges), its
-    exclusive prefix as a trivially small window, broadcast back, plus a
-    per-bucket window over the value frame — so no task ever sorts more
+    (price → per-group counts); global cumulative counts come from
+    :func:`bucketed_prefix` over fixed-width price buckets (≤ ~1,000 at
+    any corpus size for TPC-H price ranges), so no task ever sorts more
     than one bucket of distinct values. The rank-sum identity
 
         2·R_A = Σ_v ca(v) · (2·cum_lt(v) + t(v) + 1)
@@ -1411,36 +1452,9 @@ def mann_whitney_u(orders: DataFrame) -> DataFrame:
         )
         .withColumn("t", F.col("ca") + F.col("cb"))
         .withColumn("bucket", F.floor(F.col("v") / F.lit(MW_BUCKET_WIDTH)))
-        # ndv-sized; feeds both the bucket histogram and the ranked pass —
-        # materialize ONCE so the data-sized aggregate doesn't run twice
-        # (cluster form: persisted table, same cut point)
-        .localCheckpoint()
     )
-    # pass 1: bucket totals (tiny: schema-bounded at price_range/width
-    # buckets regardless of corpus size) -> exclusive prefix via a
-    # broadcast range-join self-aggregate (no unpartitioned window, no
-    # single-partition sort anywhere in the plan)
-    buckets = vals.groupBy("bucket").agg(F.sum("t").alias("bt"))
-    prev = F.broadcast(
-        buckets.select(
-            F.col("bucket").alias("pb"), F.col("bt").alias("pt")
-        )
-    )
-    offsets = (
-        buckets.join(prev, F.col("pb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(F.coalesce(F.sum("pt"), F.lit(0)).alias("off"))
-    )
-    # pass 2: within-bucket running count; vals has ONE row per distinct v,
-    # so a rows-frame ordered by v has no peer ambiguity
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = vals.join(F.broadcast(offsets), "bucket").withColumn(
-        "cum_lt",
-        F.col("off") + F.coalesce(F.sum("t").over(w_in), F.lit(0)),
+    ranked = bucketed_prefix(vals, "v", ("t",)).withColumn(
+        "cum_lt", F.col("cum_t") - F.col("t")
     )
     big = "decimal(38,0)"
     agg = ranked.agg(
@@ -1718,11 +1732,11 @@ def gini_revenue(orders: DataFrame) -> DataFrame:
 
         G = 2·Σᵢ rankᵢ·xᵢ / (n·Σx) − (n+1)/n
 
-    Rank-free at scale (the mann_whitney_u histogram template): ranks
-    never materialise per customer. Tied revenue values contribute
+    Rank-free at scale: ranks never materialise per customer. Tied
+    revenue values contribute
     Σ_{i in tie} i = c·(2·cum_lt + c + 1)/2 regardless of intra-tie
     order, so the distinct-value frame (revenue → customer count) plus
-    the two-pass bucketed prefix sum (fixed-width buckets — bounded by
+    :func:`bucketed_prefix` (fixed-width buckets — bounded by
     the per-customer revenue RANGE, which TPC-H's fixed orders-per-
     customer distribution keeps corpus-size-independent) computes the
     exact rank-weighted sum with no data-sized sort. Revenue is scaled
@@ -1739,25 +1753,9 @@ def gini_revenue(orders: DataFrame) -> DataFrame:
             "bucket",
             F.floor(F.col("x") / F.lit(GINI_BUCKET_WIDTH / GINI_REV_SCALE)),
         )
-        .localCheckpoint()
     )
-    buckets = vals.groupBy("bucket").agg(F.sum("c").alias("bt"))
-    prev = F.broadcast(
-        buckets.select(F.col("bucket").alias("pb"), F.col("bt").alias("pt"))
-    )
-    offsets = (
-        buckets.join(prev, F.col("pb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(F.coalesce(F.sum("pt"), F.lit(0)).alias("off"))
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = vals.join(F.broadcast(offsets), "bucket").withColumn(
-        "cum_lt",
-        F.col("off") + F.coalesce(F.sum("c").over(w_in), F.lit(0)),
+    ranked = bucketed_prefix(vals, "x", ("c",)).withColumn(
+        "cum_lt", F.col("cum_c") - F.col("c")
     )
     c = F.col("c").cast("double")
     ranksum = c * (2 * F.col("cum_lt").cast("double") + c + 1) / F.lit(2.0)
@@ -1972,14 +1970,10 @@ def segment_percentiles_scaled(
     (same ⌈q·n⌉ PERCENTILE_DISC rank, same oracle), but NO per-group
     full-sort window. :func:`segment_percentiles` partitions one window
     by ~5 market segments, so at 100× each task sorts ~1/5 of the fact
-    table; here the histogram-narrowing of :func:`quantile_two_pass`
-    applies instead: pass 1 is one map-side-combined (segment, bucket)
-    count aggregate (histogram-sized output), the target rank ⌈q·n⌉ is
-    located in its cumulative counts, and pass 2 ranks ONLY the selected
-    buckets (~n/n_buckets rows per group-bucket, shuffle key
-    (segment, bucket) — unbounded fan-out, no bounded-cardinality sort
-    key anywhere). Equal values always share a bucket, so
-    global rank = cum_prev + in-bucket rank exactly; ties at equal v
+    table; here :func:`histogram_quantiles` applies instead with the
+    rank ⌈q·n⌉: pass 2 ranks ONLY the selected buckets (~n/n_buckets
+    rows per group-bucket, shuffle key (segment, bucket) — unbounded
+    fan-out, no bounded-cardinality sort key anywhere). Ties at equal v
     rank arbitrarily in BOTH forms and the picked VALUE at any in-tie
     position is the run's v, so the output is deterministic.
     """
@@ -1993,51 +1987,19 @@ def segment_percentiles_scaled(
         F.lit(n_buckets - 1),
         F.greatest(F.lit(0), F.floor((F.col("v") - lo) / width).cast("int")),
     )
-    hist = j.groupBy("c_mktsegment", bucket.alias("bucket")).agg(
-        F.count("*").alias("c")
-    )
-    wb = (
-        Window.partitionBy("c_mktsegment")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wn = Window.partitionBy("c_mktsegment")
-    # histogram-sized (≤ segments × n_buckets rows) — materialize once so
-    # the per-q selection branches don't re-run the data-sized aggregate
-    cum = hist.select(
+    picked = histogram_quantiles(
+        j,
         "c_mktsegment",
-        "bucket",
-        "c",
-        F.coalesce(F.sum("c").over(wb), F.lit(0)).alias("cum_prev"),
-        F.sum("c").over(wn).alias("n"),
-    ).localCheckpoint()
-    sels = []
-    for q in pcts:
+        bucket,
+        ["v"],
+        pcts,
         # the exact twin's rank: k = ceil(q·n) over doubles
-        k = F.ceil(F.lit(q) * F.col("n").cast("double")).cast("long")
-        sels.append(
-            cum.filter((k > F.col("cum_prev")) & (k <= F.col("cum_prev") + F.col("c")))
-            .select(
-                "c_mktsegment",
-                F.lit(q).alias("pct"),
-                "bucket",
-                (k - F.col("cum_prev")).alias("offset"),
-                F.col("n").cast("long").alias("n_orders"),
-            )
-        )
-    sel = sels[0]
-    for s in sels[1:]:
-        sel = sel.unionByName(s)
-    wanted = sel.select("c_mktsegment", "bucket").distinct()
-    narrowed = j.select("c_mktsegment", "v", bucket.alias("bucket")).join(
-        F.broadcast(wanted), ["c_mktsegment", "bucket"]
-    )
-    wl = Window.partitionBy("c_mktsegment", "bucket").orderBy("v")
-    local = narrowed.withColumn("lrank", F.row_number().over(wl).cast("long"))
-    picked = (
-        local.join(F.broadcast(sel), ["c_mktsegment", "bucket"])
-        .filter(F.col("lrank") == F.col("offset"))
-        .select("c_mktsegment", "pct", F.col("v").alias("value"), "n_orders")
+        lambda q: F.ceil(F.lit(q) * F.col("n").cast("double")).cast("long"),
+    ).select(
+        "c_mktsegment",
+        F.col("q").alias("pct"),
+        F.col("v").alias("value"),
+        F.col("n").alias("n_orders"),
     )
     return picked.orderBy("c_mktsegment", "pct")
 
@@ -3193,7 +3155,7 @@ TS_BASE_DATE = "1995-01-01"
 def _signed_mag_bucket(v: Column) -> Column:
     """Monotone (non-decreasing) integer bucket of an arbitrary finite
     double — the partition key that lets a global order statistic run as
-    per-bucket windows (the mann_whitney bucketed-prefix machinery) when
+    per-bucket windows (as in :func:`bucketed_prefix`) when
     the value has no natural fixed-width domain (e.g. slopes spanning
     sign and many decades). 3-significant-digit magnitude buckets:
 
@@ -3263,8 +3225,8 @@ def theil_sen_trend(orders: DataFrame) -> DataFrame:
         "xa",
         "xb",
     )
-    # median via the bucketed two-pass prefix rank (mann_whitney/conformal
-    # machinery): the former Window.orderBy over the pair frame funneled
+    # median via the bucketed two-pass prefix rank (bucketed_prefix's
+    # algorithm): the former Window.orderBy over the pair frame funneled
     # all O(days²) rows into ONE task (guide §2.5). _signed_mag_bucket is
     # monotone in slope, so (bucket, slope, xa, xb) ranks are the GLOBAL
     # (slope, xa, xb) ranks — same ⌈np/2⌉ row, bit-identical output. The
@@ -3281,7 +3243,7 @@ def theil_sen_trend(orders: DataFrame) -> DataFrame:
     ).localCheckpoint()
     # offsets via ONE window over the bucket census, NOT the usual
     # prev-bucket triangle join: _signed_mag_bucket yields ~10⁴ distinct
-    # buckets (vs the ~60 of the fixed-width machinery), so the triangle
+    # buckets (vs the ~60 of the fixed-width callers), so the triangle
     # join is quadratic in bucket count — measured 74M joined rows at
     # sf0.1. The census is magnitude-bounded (≤ ~1M rows at ANY corpus
     # size), so a single-task cumulative window over it is constant cost.
@@ -3650,14 +3612,13 @@ def ks_test_two_sample(
     is the sup-norm gap between the two EXACT empirical CDFs, no binning
     or smoothing at all.
 
-    Scale shape (the mann_whitney_u two-pass prefix-sum trick): one
-    data-sized map-side-combined aggregate builds the distinct-value
-    frame (price → per-year counts); cumulative counts come from a
-    fixed-width bucket histogram (schema-bounded, ≤ ~1k rows at any
-    corpus size) whose exclusive prefix broadcasts back, plus a per-bucket
-    window — no task ever sorts more than one bucket of distinct values,
-    and no unpartitioned window exists anywhere in the plan. D is a max
-    over exact integer-ratio doubles (order-insensitive); the asymptotic
+    Scale shape: one data-sized map-side-combined aggregate builds the
+    distinct-value frame (price → per-year counts); cumulative counts
+    and both totals come from :func:`bucketed_prefix` over fixed-width
+    price buckets — no task ever sorts more than one bucket of distinct
+    values, and no unpartitioned window exists anywhere in the plan. D is
+    a max over exact integer-ratio doubles (order-insensitive); the
+    asymptotic
     λ = √(n_a·n_b/(n_a+n_b))·D and one-term p ≈ 2·exp(−2λ²) use the
     identical expression shape as the DuckDB twin, exp quantized at 1e-6
     (the dp_noisy_counts libm convention).
@@ -3674,51 +3635,17 @@ def ks_test_two_sample(
             F.count(F.when(~F.col("isa"), 1)).alias("cb"),
         )
         .withColumn("bucket", F.floor(F.col("v") / F.lit(KS_BUCKET_WIDTH)))
-        .localCheckpoint()  # feeds buckets + totals + ranked pass once
     )
-    buckets = vals.groupBy("bucket").agg(
-        F.sum("ca").alias("ba"), F.sum("cb").alias("bb")
-    )
-    prev = F.broadcast(
-        buckets.select(
-            F.col("bucket").alias("pb"),
-            F.col("ba").alias("pa"),
-            F.col("bb").alias("pbb"),
-        )
-    )
-    offsets = (
-        buckets.join(prev, F.col("pb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(
-            F.coalesce(F.sum("pa"), F.lit(0)).alias("offa"),
-            F.coalesce(F.sum("pbb"), F.lit(0)).alias("offb"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (
-        vals.join(F.broadcast(offsets), "bucket")
-        .withColumn("cum_a", F.col("offa") + F.sum("ca").over(w_in))
-        .withColumn("cum_b", F.col("offb") + F.sum("cb").over(w_in))
-    )
-    tot = F.broadcast(
-        vals.agg(
-            F.sum("ca").cast("double").alias("na"),
-            F.sum("cb").cast("double").alias("nb"),
-        )
-    )
-    d = cum.crossJoin(tot).agg(
+    na, nb = F.col("n_ca").cast("double"), F.col("n_cb").cast("double")
+    d = bucketed_prefix(vals, "v", ("ca", "cb")).agg(
         F.max(
             F.abs(
-                F.col("cum_a").cast("double") / F.col("na")
-                - F.col("cum_b").cast("double") / F.col("nb")
+                F.col("cum_ca").cast("double") / na
+                - F.col("cum_cb").cast("double") / nb
             )
         ).alias("dmax"),
-        F.first("na").alias("na"),
-        F.first("nb").alias("nb"),
+        F.first(na).alias("na"),
+        F.first(nb).alias("nb"),
     )
     lam = F.sqrt(F.col("na") * F.col("nb") / (F.col("na") + F.col("nb"))) * F.col(
         "dmax"
@@ -3740,11 +3667,10 @@ def kruskal_wallis_priority(orders: DataFrame) -> DataFrame:
     (Kruskal & Wallis 1952, public), with the standard tie correction
     C = 1 − Σ(t³−t)/(N³−N).
 
-    Rank-free at scale, same machinery as mann_whitney_u: per-(value,
-    group) counts from one map-side-combined aggregate, global
-    cumulative counts below each distinct value from the bucketed
-    two-pass prefix sum (no unpartitioned window), then the integer
-    rank-sum identity per group
+    Rank-free at scale, as mann_whitney_u: per-(value, group) counts
+    from one map-side-combined aggregate, global cumulative counts below
+    each distinct value from :func:`bucketed_prefix` (no unpartitioned
+    window), then the integer rank-sum identity per group
 
         2·R_g = Σ_v c_g(v) · (2·cum_lt(v) + t(v) + 1)
 
@@ -3759,36 +3685,20 @@ def kruskal_wallis_priority(orders: DataFrame) -> DataFrame:
         )
         .groupBy("v", "grp")
         .agg(F.count("*").alias("cg"))
+        # feeds the per-value totals and the per-group rank sums
         .localCheckpoint()
     )
     tots = (
         vals.groupBy("v")
         .agg(F.sum("cg").alias("t"))
         .withColumn("bucket", F.floor(F.col("v") / F.lit(KS_BUCKET_WIDTH)))
-        .localCheckpoint()
     )
-    buckets = tots.groupBy("bucket").agg(F.sum("t").alias("bt"))
-    prev = F.broadcast(
-        buckets.select(F.col("bucket").alias("pb"), F.col("bt").alias("pt"))
-    )
-    offsets = (
-        buckets.join(prev, F.col("pb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(F.coalesce(F.sum("pt"), F.lit(0)).alias("off"))
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = (
-        tots.join(F.broadcast(offsets), "bucket")
-        .withColumn(
-            "cum_lt", F.col("off") + F.coalesce(F.sum("t").over(w_in), F.lit(0))
-        )
-        .select("v", "t", "cum_lt")
+    ranked = bucketed_prefix(tots, "v", ("t",)).select(
+        "v", "t", (F.col("cum_t") - F.col("t")).alias("cum_lt")
     )
     big = "decimal(38,0)"
+    # Σ_v (t³ − t) = Σ_(v,g) c_g·(t² − 1): the tie sum rides the per-group
+    # aggregate, summed in DECIMAL(38,0) until the one double cast
     per_group = (
         vals.join(ranked, "v")
         .groupBy("grp")
@@ -3799,12 +3709,10 @@ def kruskal_wallis_priority(orders: DataFrame) -> DataFrame:
             .cast("double")
             .alias("r2g"),
             F.sum(F.col("cg").cast(big)).cast("double").alias("ng"),
+            F.sum(
+                (F.col("cg") * (F.col("t") * F.col("t") - 1)).cast(big)
+            ).alias("ties_g"),
         )
-    )
-    ties = tots.agg(
-        F.sum((F.col("t") * F.col("t") * F.col("t") - F.col("t")).cast(big))
-        .cast("double")
-        .alias("tie_sum")
     )
     agg = per_group.agg(
         F.count("*").cast("long").alias("k_groups"),
@@ -3818,7 +3726,8 @@ def kruskal_wallis_priority(orders: DataFrame) -> DataFrame:
         )
         .cast("double")
         .alias("sum_r2_over_n"),
-    ).crossJoin(F.broadcast(ties))
+        F.sum("ties_g").cast("double").alias("tie_sum"),
+    )
     n = F.col("n_total")
     h = (
         F.lit(12.0) / (n * (n + 1)) * F.col("sum_r2_over_n")
@@ -4316,8 +4225,8 @@ def conformal_interval_price(lineitem: DataFrame) -> DataFrame:
 
     The split is the engine-shared md5 lane on (orderkey, linenumber) —
     the hash_split convention. The order statistic never sorts globally:
-    the bucketed two-pass prefix sum (mann_whitney_u machinery) finds
-    the target rank with per-bucket windows only. Output includes the
+    :func:`bucketed_prefix` (a running count of 1) finds the target
+    rank with per-bucket windows only. Output includes the
     achieved calibration coverage (≥ 1−α by construction — pinned, not
     assumed).
     """
@@ -4405,48 +4314,33 @@ def conformal_interval_price(lineitem: DataFrame) -> DataFrame:
             ).alias("r"),
             "okey",
             "lno",
+            F.lit(1).alias("one"),
         )
         .withColumn("bucket", F.floor(F.col("r") / F.lit(CONF_BUCKET)))
-        .localCheckpoint()
     )
-    buckets = cal.groupBy("bucket").agg(F.count("*").alias("bt"))
-    prev = F.broadcast(
-        buckets.select(F.col("bucket").alias("pb"), F.col("bt").alias("pt"))
+    # the running count of 1 in (r, okey, lno) order is the row number
+    ranked = bucketed_prefix(cal, ["r", "okey", "lno"], ("one",))
+    target = F.ceil(
+        (F.col("n_one").cast("double") + 1.0) * F.lit(1.0 - CONF_ALPHA)
     )
-    offsets = (
-        buckets.join(prev, F.col("pb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(F.coalesce(F.sum("pt"), F.lit(0)).alias("off"))
-    )
-    ncal = F.broadcast(cal.agg(F.count("*").alias("n_cal")))
-    w_in = Window.partitionBy("bucket").orderBy("r", "okey", "lno")
-    ranked = (
-        cal.join(F.broadcast(offsets), "bucket")
-        .crossJoin(ncal)
-        .withColumn("rk", F.col("off") + F.row_number().over(w_in))
-        .withColumn(
-            "target",
-            F.ceil(
-                (F.col("n_cal").cast("double") + 1.0) * F.lit(1.0 - CONF_ALPHA)
-            ),
-        )
-    )
-    q = ranked.filter(F.col("rk") == F.col("target")).select(
-        F.col("r").alias("q_width"), F.col("n_cal").alias("n_cal")
+    q = ranked.filter(F.col("cum_one") == target).select(
+        F.col("r").alias("q_width"), F.col("n_one").alias("n_cal")
     )
     cov = (
-        cal.crossJoin(F.broadcast(q))
+        ranked.crossJoin(F.broadcast(q))
+        .groupBy("q_width", "n_cal")
         .agg(
             F.sum(F.when(F.col("r") <= F.col("q_width"), 1).otherwise(0))
             .cast("double")
             .alias("n_in"),
             F.count("*").cast("double").alias("nc"),
         )
-        .select((F.col("n_in") / F.col("nc")).alias("coverage"))
+        .select(
+            (F.col("n_in") / F.col("nc")).alias("coverage"), "q_width", "n_cal"
+        )
     )
     return (
-        fit.crossJoin(F.broadcast(q))
-        .crossJoin(F.broadcast(cov))
+        fit.crossJoin(F.broadcast(cov))
         .select(
             F.col("n_train").cast("long").alias("n_train"),
             F.col("n_cal").cast("long").alias("n_cal"),
@@ -4675,11 +4569,10 @@ def levene_brown_forsythe(orders: DataFrame) -> DataFrame:
     anova_oneway_priority (means) and kruskal_wallis_priority (ranks).
 
     Pass 1 finds each group's EXACT median (type-1 lower order
-    statistic, rank ⌈n_g/2⌉) with the per-group bucketed prefix rank —
-    distinct-value frames keyed (group, bucket), per-bucket windows
-    only, the group key never sorts more than one bucket (the
-    mann_whitney_u machinery partitioned by group). Pass 2 is the
-    one-aggregate ANOVA F on |x − med_g| with the broadcast 5-row
+    statistic, rank ⌈n_g/2⌉) with :func:`bucketed_prefix` partitioned
+    by group — distinct-value frames keyed (group, bucket), per-bucket
+    windows only, the group key never sorts more than one bucket. Pass 2
+    is the one-aggregate ANOVA F on |x − med_g| with the broadcast 5-row
     median table. Two data passes total at any corpus size.
     """
     x = F.col("o_totalprice").cast("double")
@@ -4690,43 +4583,12 @@ def levene_brown_forsythe(orders: DataFrame) -> DataFrame:
         base.groupBy("grp", "v")
         .agg(F.count("*").alias("cnt"))
         .withColumn("bucket", F.floor(F.col("v") / F.lit(KS_BUCKET_WIDTH)))
-        .localCheckpoint()
     )
-    buckets = vals.groupBy("grp", "bucket").agg(F.sum("cnt").alias("bt"))
-    prev = F.broadcast(
-        buckets.select(
-            F.col("grp").alias("pg"), F.col("bucket").alias("pb"),
-            F.col("bt").alias("pt"),
-        )
-    )
-    offsets = (
-        buckets.join(
-            prev,
-            (F.col("pg") == F.col("grp")) & (F.col("pb") < F.col("bucket")),
-            "left",
-        )
-        .groupBy("grp", "bucket")
-        .agg(F.coalesce(F.sum("pt"), F.lit(0)).alias("off"))
-    )
-    ng = F.broadcast(
-        vals.groupBy("grp").agg(F.sum("cnt").alias("n_g"))
-    )
-    w_in = (
-        Window.partitionBy("grp", "bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ranked = (
-        vals.join(F.broadcast(offsets), ["grp", "bucket"])
-        .join(ng, "grp")
-        .withColumn("cum", F.col("off") + F.sum("cnt").over(w_in))
-    )
+    ranked = bucketed_prefix(vals, "v", ("cnt",), group=("grp",))
+    half = F.ceil(F.col("n_cnt").cast("double") / 2.0)
     med = F.broadcast(
-        ranked.filter(
-            (F.col("cum") - F.col("cnt"))
-            < F.ceil(F.col("n_g").cast("double") / 2.0)
-        )
-        .filter(F.col("cum") >= F.ceil(F.col("n_g").cast("double") / 2.0))
+        ranked.filter((F.col("cum_cnt") - F.col("cnt")) < half)
+        .filter(F.col("cum_cnt") >= half)
         .select("grp", F.col("v").alias("med"))
     )
     z = F.abs(F.col("v") - F.col("med"))
@@ -5369,10 +5231,10 @@ def percentile_cont_priority(orders: DataFrame) -> DataFrame:
     trusting either engine's native quantile_cont, so the interpolation
     arithmetic is engine-identical by shape.
 
-    Scale: the group-partitioned bucketed prefix rank (the
-    levene_brown_forsythe machinery) indexes distinct values without any
-    group-wide sort; the six needed order statistics per group are
-    conditional picks over the ranked distinct-value frame.
+    Scale: :func:`bucketed_prefix` partitioned by group indexes
+    distinct values without any group-wide sort; the six needed order
+    statistics per group are conditional picks over the ranked
+    distinct-value frame.
     """
     x = F.col("o_totalprice").cast("double")
     base = orders.select(F.col("o_orderpriority").alias("grp"), x.alias("v"))
@@ -5380,46 +5242,20 @@ def percentile_cont_priority(orders: DataFrame) -> DataFrame:
         base.groupBy("grp", "v")
         .agg(F.count("*").alias("cnt"))
         .withColumn("bucket", F.floor(F.col("v") / F.lit(KS_BUCKET_WIDTH)))
-        .localCheckpoint()
     )
-    buckets = vals.groupBy("grp", "bucket").agg(F.sum("cnt").alias("bt"))
-    prev = F.broadcast(
-        buckets.select(
-            F.col("grp").alias("pg"), F.col("bucket").alias("pb"),
-            F.col("bt").alias("pt"),
-        )
-    )
-    offsets = (
-        buckets.join(
-            prev,
-            (F.col("pg") == F.col("grp")) & (F.col("pb") < F.col("bucket")),
-            "left",
-        )
-        .groupBy("grp", "bucket")
-        .agg(F.coalesce(F.sum("pt"), F.lit(0)).alias("off"))
-    )
-    ng = F.broadcast(vals.groupBy("grp").agg(F.sum("cnt").alias("n_g")))
-    w_in = (
-        Window.partitionBy("grp", "bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ranked = (
-        vals.join(F.broadcast(offsets), ["grp", "bucket"])
-        .join(ng, "grp")
-        .withColumn("cum", F.col("off") + F.sum("cnt").over(w_in))
-    )
+    ranked = bucketed_prefix(vals, "v", ("cnt",), group=("grp",))
 
     def stat_at(idx: Column) -> Column:
         # value of the idx-th order statistic: the distinct value whose
         # cumulative range covers idx
-        covers = ((F.col("cum") - F.col("cnt")) < idx) & (F.col("cum") >= idx)
+        cum = F.col("cum_cnt")
+        covers = ((cum - F.col("cnt")) < idx) & (cum >= idx)
         return F.max(F.when(covers, F.col("v")))
 
-    aggs: list[Column] = [F.max("n_g").cast("long").alias("n")]
+    aggs: list[Column] = [F.max("n_cnt").cast("long").alias("n")]
     for p in PCONT_PS:
         tag = str(int(p * 100))
-        h = (F.col("n_g").cast("double") - 1.0) * F.lit(p) + 1.0
+        h = (F.col("n_cnt").cast("double") - 1.0) * F.lit(p) + 1.0
         lo = F.floor(h)
         aggs.append(stat_at(lo).alias(f"lo{tag}"))
         aggs.append(stat_at(lo + 1).alias(f"hi{tag}"))
@@ -5971,9 +5807,10 @@ def lorenz_curve_deciles(orders: DataFrame) -> DataFrame:
     Rank-free at scale: per-customer revenue collapses to the
     distinct-value frame, the bucketed two-pass prefix sum assigns each
     distinct value its cumulative customer count AND cumulative revenue
-    (same machinery as gini_revenue), and each decile's share is read
-    off the frame with a conditional pick — the decile boundary falls
-    INSIDE a tied value group, so the boundary group contributes
+    (:func:`bucketed_prefix`'s algorithm, its revenue prefix summed in
+    DECIMAL(38,8)), and each decile's share is read off the frame with
+    a conditional pick — the decile boundary falls INSIDE a tied value
+    group, so the boundary group contributes
     pro-rata (exact rational arithmetic: heads·value, never a float
     estimate of the split).
     """
@@ -6124,10 +5961,10 @@ def anderson_darling_price(orders: DataFrame) -> DataFrame:
     group with c members starting after cum_lt smaller rows contributes
     exact integer weight sums t₁ = c·(2·cum_lt + c) and
     t₂ = c·(2(n−cum_lt) − c), so the whole statistic reduces to one pass
-    over the distinct-value frame with the bucketed two-pass prefix
-    (mann_whitney machinery). Φ comes from the engine-shared A&S
-    polynomial (bh_fdr convention); per-value terms are pre-scaled by
-    1/n and quantized at 1e-4 before the DECIMAL(38,8) sum (lane rule).
+    over the distinct-value frame with :func:`bucketed_prefix`. Φ comes
+    from the engine-shared A&S polynomial (bh_fdr convention); per-value
+    terms are pre-scaled by 1/n and quantized at 1e-4 before the
+    DECIMAL(38,8) sum (lane rule).
     The case-0.05 critical value (0.787, de-meaned/de-scaled variant
     A*² with the small-n factor) is reported alongside raw A².
     """
@@ -6150,27 +5987,10 @@ def anderson_darling_price(orders: DataFrame) -> DataFrame:
         orders.groupBy(x.alias("v"))
         .agg(F.count("*").alias("c"))
         .withColumn("bucket", F.floor(F.col("v") / F.lit(KS_BUCKET_WIDTH)))
-        .localCheckpoint()
-    )
-    buckets = vals.groupBy("bucket").agg(F.sum("c").alias("bt"))
-    prev = F.broadcast(
-        buckets.select(F.col("bucket").alias("pb"), F.col("bt").alias("pt"))
-    )
-    offsets = (
-        buckets.join(prev, F.col("pb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(F.coalesce(F.sum("pt"), F.lit(0)).alias("off"))
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
     )
     ranked = (
-        vals.join(F.broadcast(offsets), "bucket")
-        .withColumn(
-            "cum_lt", F.col("off") + F.coalesce(F.sum("c").over(w_in), F.lit(0))
-        )
+        bucketed_prefix(vals, "v", ("c",))
+        .withColumn("cum_lt", F.col("cum_c") - F.col("c"))
         .crossJoin(mom)
     )
     z = (F.col("v") - F.col("mu")) / F.col("sd")
@@ -6211,9 +6031,9 @@ def ks_normality_price(orders: DataFrame) -> DataFrame:
     jarque_bera_price (moments) and anderson_darling_price (tail-
     weighted integral): KS weighs the CENTER.
 
-    Same machinery as the two-sample KS: distinct-value frame + bucketed
-    prefix ranks (no global sort); Φ from the shared A&S polynomial.
-    The α=0.05 decision uses the public Lilliefors large-n approximation
+    Same plan as the two-sample KS: distinct-value frame +
+    :func:`bucketed_prefix` (no global sort); Φ from the shared A&S
+    polynomial. The α=0.05 decision uses the public Lilliefors large-n approximation
     0.886/√n, compared on qround'd values.
     """
     x = F.col("o_totalprice").cast("double")
@@ -6235,33 +6055,14 @@ def ks_normality_price(orders: DataFrame) -> DataFrame:
         orders.groupBy(x.alias("v"))
         .agg(F.count("*").alias("c"))
         .withColumn("bucket", F.floor(F.col("v") / F.lit(KS_BUCKET_WIDTH)))
-        .localCheckpoint()
     )
-    buckets = vals.groupBy("bucket").agg(F.sum("c").alias("bt"))
-    prev = F.broadcast(
-        buckets.select(F.col("bucket").alias("pb"), F.col("bt").alias("pt"))
-    )
-    offsets = (
-        buckets.join(prev, F.col("pb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(F.coalesce(F.sum("pt"), F.lit(0)).alias("off"))
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ranked = (
-        vals.join(F.broadcast(offsets), "bucket")
-        .withColumn("cum", F.col("off") + F.sum("c").over(w_in))
-        .crossJoin(mom)
-    )
+    ranked = bucketed_prefix(vals, "v", ("c",)).crossJoin(mom)
     z = (F.col("v") - F.col("mu")) / F.col("sd")
     phi = F.when(z >= 0, F.lit(1.0) - _norm_sf_expr(z)).otherwise(
         _norm_sf_expr(-z)
     )
-    hi = F.col("cum").cast("double") / F.col("n")
-    lo = (F.col("cum") - F.col("c")).cast("double") / F.col("n")
+    hi = F.col("cum_c").cast("double") / F.col("n")
+    lo = (F.col("cum_c") - F.col("c")).cast("double") / F.col("n")
     d_row = F.greatest(F.abs(hi - phi), F.abs(lo - phi))
     agg = ranked.agg(F.max("n").alias("n"), F.max(d_row).alias("d"))
     crit = F.lit(0.886) / F.sqrt(F.col("n"))

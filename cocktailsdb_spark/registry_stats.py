@@ -2275,8 +2275,9 @@ register("oaxaca_price_gap", _q_oaxaca, _oaxaca_sql())
 
 def _q_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lorenz curve at customer deciles
-    (operators/relational.py:lorenz_curve_deciles): gini_revenue's
-    bucketed-prefix machinery with exact pro-rata boundary splits."""
+    (operators/relational.py:lorenz_curve_deciles): the bucketed prefix
+    (relational.bucketed_prefix's algorithm) with exact pro-rata boundary
+    splits."""
     return relational.lorenz_curve_deciles(load(spark, sf_dir, "orders"))
 
 

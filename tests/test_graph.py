@@ -113,6 +113,19 @@ def test_triangle_stats_star_plus_triangle(spark):
     assert row.n_nodes == 8 and row.n_edges == 7
 
 
+def test_triangle_stats_releases_its_caches(spark):
+    """The canonical edge set and the degree table are cached while the
+    count runs and released once the one-row result is pinned, so every
+    distinct input does not leave two cache entries behind."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # start from an empty cache
+    edges = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    row = G.triangle_stats(df).collect()[0]
+    assert (row.n_triangles, row.n_wedges) == (1, 5)
+    assert cache.isEmpty()
+
+
 def test_bfs_levels_path_and_disconnected(spark):
     # path a-b-c-d plus a disconnected pair x-y: BFS from min node "a"
     # reaches the path only; x/y are absent from the result

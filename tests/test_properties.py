@@ -11,7 +11,7 @@ import math
 import sys
 from pathlib import Path
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -199,6 +199,56 @@ def test_quantile_two_pass_equals_naive_on_random_frames(spark, vals, n_groups):
         for r in R.quantile_two_pass(df).collect()
     }
     assert fast == naive
+
+
+@settings(max_examples=10, deadline=None)
+@example(
+    # a one-row group on a negative bucket edge (-2.5), a zero count, and
+    # two distinct values sharing a bucket
+    cells={(0, -5): (3, 0), (1, 5): (0, 2), (1, 6): (7, 7)},
+    grouped=True,
+)
+@given(
+    cells=st.dictionaries(
+        keys=st.tuples(st.integers(0, 2), st.integers(-40, 40)),
+        values=st.tuples(st.integers(0, 10_000), st.integers(0, 3)),
+        min_size=1,
+        max_size=40,
+    ),
+    grouped=st.booleans(),
+)
+def test_bucketed_prefix_equals_python_running_counts(spark, cells, grouped):
+    """The two-pass bucketed prefix must equal a plain cumulative count
+    for ANY distinct-value frame: heavy ties (large counts), values on
+    bucket edges (multiples of the 2.5 width), negative values (negative
+    floor buckets), one-row groups, zero counts and two count columns."""
+    from cocktailsdb_spark.operators.relational import bucketed_prefix
+
+    if not grouped:  # one group: merge the generated groups by value
+        merged: dict[tuple[int, int], tuple[int, int]] = {}
+        for (_, k), (a, b) in cells.items():
+            pa, pb = merged.get((0, k), (0, 0))
+            merged[(0, k)] = (pa + a, pb + b)
+        cells = merged
+    rows = [(g, k * 0.5, a, b) for (g, k), (a, b) in cells.items()]
+    df = spark.createDataFrame(rows, "g int, v double, ca long, cb long").withColumn(
+        "bucket", F.floor(F.col("v") / F.lit(2.5))
+    )
+    got = {
+        (r.g, r.v): (r.cum_ca, r.cum_cb, r.n_ca, r.n_cb)
+        for r in bucketed_prefix(
+            df, "v", ("ca", "cb"), group=("g",) if grouped else ()
+        ).collect()
+    }
+    model = {}
+    for g in {g for g, *_ in rows}:
+        mine = sorted((v, a, b) for gg, v, a, b in rows if gg == g)
+        na, nb = sum(a for _, a, _ in mine), sum(b for *_, b in mine)
+        cum_a = cum_b = 0
+        for v, a, b in mine:
+            cum_a, cum_b = cum_a + a, cum_b + b
+            model[(g, v)] = (cum_a, cum_b, na, nb)
+    assert got == model
 
 
 @settings(max_examples=6, deadline=None)

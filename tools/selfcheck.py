@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import argparse
 import datetime as dt
+import json
 import sys
 import tempfile
 import time
@@ -111,6 +112,9 @@ def main() -> int:
         "insurance sweep)",
     )
     args = ap.parse_args()
+    # one result line per entry, visible as it lands even when the output
+    # goes to a file
+    sys.stdout.reconfigure(line_buffering=True)
 
     if args.default_session:
         import os as _os2
@@ -152,7 +156,7 @@ def main() -> int:
     generated = set() if rp.reference_data_present() else {"reference_parity_poc"}
 
     n_pass = n_fail = n_rows_only = 0
-    results: dict[str, dict] = {}
+    ledger = _Ledger(args.sf, generated)
     for name, fn in queries.items():
         if only and name not in only:
             continue
@@ -169,13 +173,13 @@ def main() -> int:
         except Exception as e:
             print(f"FAIL  {name}: SPARK ERROR {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1
-            results[name] = {"status": "FAIL", "rows": 0}
+            ledger.put(name, {"status": "FAIL", "rows": 0})
             continue
         t_spark = time.time() - t0
         if oracle is None:
             print(f"rows  {name}: {len(sdf)} rows (rows-only, {t_spark:.1f}s)")
             n_rows_only += 1
-            results[name] = {"status": "rows", "rows": len(sdf)}
+            ledger.put(name, {"status": "rows", "rows": len(sdf)})
             continue
         t0 = time.time()
         try:
@@ -183,7 +187,7 @@ def main() -> int:
         except Exception as e:
             print(f"FAIL  {name}: DUCKDB ERROR {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1
-            results[name] = {"status": "FAIL", "rows": len(sdf)}
+            ledger.put(name, {"status": "FAIL", "rows": len(sdf)})
             continue
         t_duck = time.time() - t0
         problems = []
@@ -202,20 +206,25 @@ def main() -> int:
         if problems:
             print(f"FAIL  {name}: " + " | ".join(problems))
             n_fail += 1
-            results[name] = {"status": "FAIL", "rows": len(sdf)}
+            ledger.put(name, {"status": "FAIL", "rows": len(sdf)})
         else:
             via = " on generated input" if name in generated else ""
             print(f"ok    {name}: {len(sdf)} rows{via} (spark {t_spark:.1f}s, duckdb {t_duck:.1f}s)")
             n_pass += 1
-            results[name] = {"status": "ok", "rows": len(sdf)}
+            ledger.put(name, {"status": "ok", "rows": len(sdf)})
 
     print(f"\n{n_pass} ok, {n_rows_only} rows-only, {n_fail} FAIL")
-    _update_ledger(results, args.sf, generated)
+    print(
+        f"ledger: {n_pass + n_rows_only + n_fail} entries updated -> {LEDGER.name}"
+    )
     return 1 if n_fail else 0
 
 
-def _update_ledger(results: dict[str, dict], sf: str, generated: set[str]) -> None:
-    """Merge this run's per-entry outcomes into selfcheck_ledger.json.
+LEDGER = Path(__file__).resolve().parent.parent / "selfcheck_ledger.json"
+
+
+class _Ledger:
+    """Per-entry outcomes merged into selfcheck_ledger.json.
 
     The ledger is the committed record that EVERY registry entry has
     oracle evidence on its CURRENT source (tests/test_sweep_gate.py —
@@ -227,24 +236,25 @@ def _update_ledger(results: dict[str, dict], sf: str, generated: set[str]) -> No
     ``--only`` runs update just their entries, so the gate is satisfiable
     incrementally without a full sweep per commit. An entry in
     ``generated`` ran on generated input, not at ``sf``; its row says so.
+
+    Each entry's row is written as soon as the entry finishes (through a
+    temporary file and a rename), so a sweep that dies part-way still
+    records every entry it checked.
     """
-    import json
 
-    from cocktailsdb_spark.registry import entry_source_hash
+    def __init__(self, sf: str, generated: set[str]) -> None:
+        self.sf, self.generated = sf, generated
+        self.rows = json.loads(LEDGER.read_text()) if LEDGER.exists() else {}
 
-    root = Path(__file__).resolve().parent.parent
-    path = root / "selfcheck_ledger.json"
-    ledger = json.loads(path.read_text()) if path.exists() else {}
-    for name, rec in results.items():
-        ledger[name] = {
-            **rec,
-            "sf": sf,
-            "source_hash": entry_source_hash(name),
-        }
-        if name in generated:
-            ledger[name].update(input="generated", seed=GEN_SEED, sf=None)
-    path.write_text(json.dumps(ledger, indent=1, sort_keys=True) + "\n")
-    print(f"ledger: {len(results)} entries updated -> {path.name}")
+    def put(self, name: str, rec: dict) -> None:
+        from cocktailsdb_spark.registry import entry_source_hash
+
+        self.rows[name] = {**rec, "sf": self.sf, "source_hash": entry_source_hash(name)}
+        if name in self.generated:
+            self.rows[name].update(input="generated", seed=GEN_SEED, sf=None)
+        tmp = LEDGER.with_name(LEDGER.name + ".tmp")
+        tmp.write_text(json.dumps(self.rows, indent=1, sort_keys=True) + "\n")
+        tmp.replace(LEDGER)
 
 
 if __name__ == "__main__":
