@@ -15,6 +15,13 @@ S8 sink_ctas = overwrite-mode saveAsTable of the PoC result (the direct
 analog of poc_tables.sql:3's CREATE TABLE AS). At scale global_sales would
 be partitioned by to_date(dateOfSale) so the watermark filter
 partition-prunes.
+
+Incremental cost: a batch appends its slice to global_sales, numbering
+saleID on from the rows landed so far (kept in the control record), and
+rewrites a dimension only when its input changed — bar_stock when the
+stock file's fingerprint (also in the control record) moved, cocktails
+when the fetched records hold a row the stored dim lacks. The PoC CTAS
+is rebuilt every batch.
 """
 
 from __future__ import annotations
@@ -30,7 +37,8 @@ from ..operators.dedup import latest_wins
 from ..runlog import RunLog
 from ..sources import csv_sources
 from ..sources.http_source import Transport, bounded_keys, fetch_df, http_transport
-from ..sources.watermark import DEFAULT_MARK, WatermarkStore, advance_marks
+from ..sources.watermark import DEFAULT_MARK, ControlRecord, WatermarkStore, advance_marks
+from ..tables import _file_identity
 
 SOURCE_BARS = ("budapest", "london", "new york")
 
@@ -111,19 +119,21 @@ def process_sales_data(
     london_path: str,
     ny_path: str,
     marks: dict,
-) -> tuple[DataFrame, dict, DataFrame]:
+    first_id: int = 0,
+) -> tuple[DataFrame, dict, dict, DataFrame]:
     """Stage 4 (build_database.py:95-168): three heterogeneous scans →
     per-source bar tag (P8) + strict-> watermark filter (P9) → union (O3)
-    → new marks for every source in one grouped job (A2) → saleID (P3) →
-    price double (P5) → lowercase (P7).
+    → new marks and row counts for every source in one grouped job (A2)
+    → saleID (P3) numbered from ``first_id`` → price double (P5) →
+    lowercase (P7).
 
-    Returns (conformed sales, new marks, pinned slice). The tagged,
-    filtered union is persisted lazily: the marks job fills it, and the
-    distinct-drink collect and the global_sales append read it, so each
-    source is scanned once per batch. The CALLER unpersists the slice on
-    every path — Spark's cache would otherwise serve a later run's
-    identical plan over the same directories, new files or not — and
-    writes the marks after the sink commits (the §3.4 ordering fix)."""
+    Returns (conformed sales, new marks, rows per source, pinned slice).
+    The tagged, filtered union is persisted lazily: the marks job fills
+    it, and the distinct-drink collect and the global_sales append read
+    it, so each source is scanned once per batch. The CALLER unpersists
+    the slice on every path — Spark's cache would otherwise serve a later
+    run's identical plan over the same directories, new files or not —
+    and writes the marks after the sink commits (the §3.4 ordering fix)."""
     sources = {
         "budapest": csv_sources.read_sales_iso_csv(spark, budapest_path),
         "london": csv_sources.read_sales_tsv_headerless(spark, london_path),
@@ -137,19 +147,22 @@ def process_sales_data(
         for bar, df in sources.items()
     ]).persist()
     try:
-        new_marks, _ = advance_marks(inc, "bar", "dateOfSale", marks)
+        new_marks, counts = advance_marks(inc, "bar", "dateOfSale", marks)
     except BaseException:
         inc.unpersist()
         raise
     sales = conform.add_surrogate_key(
         inc.drop("idx"), "saleID", ["bar", "dateOfSale", "drink", "price"]
     )
-    sales = sales.withColumn("price", conform.cast_double("price"))
+    sales = sales.withColumn("saleID", F.col("saleID") + first_id).withColumn(
+        "price", conform.cast_double("price")
+    )
     return (
         conform.lowercase_strings(
             sales.select("saleID", "dateOfSale", "drink", "price", "bar")
         ),
         new_marks,
+        counts,
         inc,
     )
 
@@ -165,7 +178,8 @@ def query_cocktail_data(
     the named error pointing at fetch_distributed instead of OOMing the
     driver)."""
     keys = bounded_keys(sales, "drink")
-    raw = fetch_df(spark, keys, transport=transport)
+    # driver-sized (the capped keys): one partition, so no shuffle to dedup
+    raw = fetch_df(spark, keys, transport=transport).coalesce(1)
     dd = latest_wins(raw, ["idDrink"], ["dateModified", "strDrink"])
     return conform.lowercase_strings(dd)
 
@@ -214,21 +228,50 @@ def _merge_cocktails_dim(
     latest-wins merge on idDrink — same records, no duplicates. The merged
     dim is staged to a sibling parquet dir first so the overwrite never
     reads the table it is replacing (the caller cleans the staging dir
-    after the sink commits)."""
+    after the sink commits). A stored dim is attached by the caller."""
     full = f"{db}.cocktails"
-    loc = os.path.join(base_dir, "cocktails")
-    if spark.catalog.tableExists(full):
-        existing = spark.table(full)
-    elif os.path.isdir(loc):
-        existing = spark.read.parquet(loc)  # written by an earlier process
-    else:
+    if not spark.catalog.tableExists(full):
         return fresh
     merged = latest_wins(
-        existing.unionByName(fresh), ["idDrink"], ["dateModified", "strDrink"]
+        spark.table(full).unionByName(fresh), ["idDrink"], ["dateModified", "strDrink"]
     )
     staged = os.path.join(base_dir, "_cocktails_staged")
     merged.write.mode("overwrite").parquet(staged)
     return spark.read.parquet(staged)
+
+
+def _holds_every_row(stored: DataFrame, fresh: DataFrame) -> bool:
+    """True iff every row of ``fresh`` appears in ``stored``, compared
+    null-safe column by column. When ``stored`` is a ``latest_wins``
+    output, latest_wins(stored ∪ fresh) is then ``stored`` itself, so the
+    merge would rewrite the same rows. Both sides are dimension-sized and
+    ``fresh`` is one partition (``query_cocktail_data``): a one-partition
+    hash anti-join is one job, with no shuffle and no broadcast."""
+    on = [fresh[c].eqNullSafe(stored[c]) for c in fresh.columns]
+    return fresh.join(stored.coalesce(1).hint("shuffle_hash"), on, "left_anti").isEmpty()
+
+
+def _stock_fingerprint(path: str) -> str | None:
+    """The stock input's identity — real path, mtime_ns and size, for
+    every file under a directory — as a short hash. None when the path
+    cannot be stat'ed locally; the stock is then rebuilt every batch."""
+    ident = _file_identity(path)
+    return ident and hashlib.sha256(repr(ident).encode("utf-8")).hexdigest()[:16]
+
+
+def _first_sale_id(
+    spark: SparkSession, db: str, base_dir: str, record: ControlRecord
+) -> int:
+    """The saleID a batch numbers from: the rows landed so far, as the
+    control record keeps them. A record written before it kept the count
+    falls back to max(saleID)+1 of the stored global_sales (one job, once:
+    that batch's record keeps the count); a first run starts at 0."""
+    if record.landed is not None:
+        return record.landed
+    if not _attach_table(spark, db, "global_sales", base_dir):
+        return 0
+    top = spark.table(f"{db}.global_sales").agg(F.max("saleID")).first()[0]
+    return 0 if top is None else top + 1
 
 
 def build_database(
@@ -242,14 +285,22 @@ def build_database(
 ) -> DataFrame:
     """The whole main() (build_database.py:227-253) + PoC CTAS.
 
-    Write order (§3.4 fix): sinks commit, THEN watermarks advance.
+    Write order (§3.4 fix): sinks commit, THEN the control record — the
+    watermarks, the rows landed so far and the stock input's fingerprint,
+    in one write. A crash in between re-runs the batch's writes.
     All four tables are catalog tables (S6 append / S8 CTAS-overwrite
     semantics); returns the materialized poc_analysis table.
 
+    A batch rewrites a dimension only when its input changed: bar_stock
+    when ``bar_data_path``'s fingerprint differs from the recorded one,
+    cocktails when the fetched records hold a row the stored dim lacks.
+    The sinks stage's run-log detail names the dimensions it skipped.
+
     No-new-data runs short-circuit: when no source advanced its watermark
-    (strict-`>` filter admitted zero rows everywhere) and all four tables
-    already exist, the stored poc_analysis is returned without rewriting
-    anything — the incremental protocol's whole point.
+    (strict-`>` filter admitted zero rows everywhere), the stock input is
+    unchanged and all four tables already exist, the stored poc_analysis
+    is returned without rewriting anything — the incremental protocol's
+    whole point.
 
     The marks are read once. The pinned sales slice (see
     ``process_sales_data``) is released and the run log flushed on every
@@ -261,33 +312,51 @@ def build_database(
 
     try:
         with runlog.stage("sales_data"):
-            marks_before = store.read(spark)
-            sales, new_marks, pinned = process_sales_data(
-                spark, budapest_path, london_path, ny_path, marks_before
+            before = store.read(spark)
+            first_id = _first_sale_id(spark, db, base_dir, before)
+            sales, new_marks, counts, pinned = process_sales_data(
+                spark, budapest_path, london_path, ny_path, before, first_id
             )
-        if marks_before and new_marks == marks_before and all(
+        stock_id = _stock_fingerprint(bar_data_path)
+        keep_stock = (
+            stock_id is not None
+            and stock_id == before.fingerprint
+            and _attach_table(spark, db, "bar_stock", base_dir)
+        )
+        if before and new_marks == before and keep_stock and all(
             _attach_table(spark, db, t, base_dir)
-            for t in ("global_sales", "bar_stock", "cocktails", "poc_analysis")
+            for t in ("global_sales", "cocktails", "poc_analysis")
         ):
             with runlog.stage("short_circuit", "no source advanced its watermark"):
                 return spark.table(f"{db}.poc_analysis")
 
-        with runlog.stage("bar_data"):
-            stock = process_bar_data(spark, bar_data_path)
+        with runlog.stage("bar_data", "input unchanged" if keep_stock else ""):
+            stock = None if keep_stock else process_bar_data(spark, bar_data_path)
         with runlog.stage("cocktail_dim"):
             cocktails = query_cocktail_data(spark, sales, transport)
+            keep_cocktails = _attach_table(spark, db, "cocktails", base_dir) and (
+                _holds_every_row(spark.table(f"{db}.cocktails"), cocktails)
+            )
 
-        with runlog.stage("sinks"):
+        kept = {"bar_stock": keep_stock, "cocktails": keep_cocktails}
+        skipped = ", ".join(t for t, keep in kept.items() if keep)
+        with runlog.stage("sinks", f"skipped {skipped}" if skipped else ""):
             _write_table(spark, sales, db, "global_sales", base_dir, append=True)  # S6
-            _write_table(spark, stock, db, "bar_stock", base_dir, append=False)
-            cocktails = _merge_cocktails_dim(spark, db, base_dir, cocktails)
-            _write_table(spark, cocktails, db, "cocktails", base_dir, append=False)
-            staged = os.path.join(base_dir, "_cocktails_staged")
-            if os.path.isdir(staged):
-                import shutil
+            if not keep_stock:
+                _write_table(spark, stock, db, "bar_stock", base_dir, append=False)
+            if not keep_cocktails:
+                cocktails = _merge_cocktails_dim(spark, db, base_dir, cocktails)
+                _write_table(spark, cocktails, db, "cocktails", base_dir, append=False)
+                staged = os.path.join(base_dir, "_cocktails_staged")
+                if os.path.isdir(staged):
+                    import shutil
 
-                shutil.rmtree(staged)
-            store.write(spark, new_marks)  # only after the sinks committed
+                    shutil.rmtree(staged)
+            # only after the sinks committed
+            store.write(
+                spark, new_marks,
+                landed=first_id + sum(counts.values()), fingerprint=stock_id,
+            )
 
         with runlog.stage("poc_ctas"):
             poc = poc_analysis_bar(

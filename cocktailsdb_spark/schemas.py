@@ -74,11 +74,14 @@ COCKTAILS = T.StructType(
     ]
 )
 
-# watermark control table (replaces last_update.txt:1-3; SURVEY.md §2 S9/S10)
+# watermark control table (replaces last_update.txt:1-3; SURVEY.md §2 S9/S10);
+# landed/fingerprint are set on the batch row only (sources/watermark.py)
 WATERMARKS = T.StructType(
     [
         T.StructField("source", T.StringType(), False),
         T.StructField("high_water_mark", T.TimestampType()),
+        T.StructField("landed", T.LongType()),
+        T.StructField("fingerprint", T.StringType()),
     ]
 )
 

@@ -10,6 +10,12 @@ starts no Python worker. Every source's new mark comes from ONE grouped
 job over the tagged incremental slice (``advance_marks``), not one job per
 source.
 
+The control record is one small table written in ONE write after the
+sinks: a row per source (its mark) plus one ``_batch`` row holding the
+rows landed so far (the next surrogate key) and the fingerprint of the
+dimension input the stored dimension was built from. A table written
+before those were kept reads with both as None.
+
 The streaming mapping of the same protocol (checkpoint-backed
 ``withWatermark``) is in cocktailsdb_spark.streaming.
 """
@@ -27,35 +33,78 @@ from ..frames import local_frame
 from ..schemas import WATERMARKS
 
 DEFAULT_MARK = dt.datetime(1900, 1, 1)  # reference default '1900-01-01'
+BATCH_ROW = "_batch"  # the record's batch row, keyed like a source
+
+
+class ControlTableError(RuntimeError):
+    """The control table's directory exists but holds no committed data."""
+
+
+class ControlRecord(dict):
+    """The committed record: per-source high-water marks (the dict itself,
+    so a record compares equal to its marks), ``landed`` — rows landed so
+    far — and ``fingerprint`` — the dimension input's identity. Either is
+    None when the record did not keep it."""
+
+    def __init__(self, marks=(), landed: int | None = None, fingerprint: str | None = None):
+        super().__init__(marks)
+        self.landed = landed
+        self.fingerprint = fingerprint
 
 
 class WatermarkStore:
-    """Per-source high-water marks in a parquet control table."""
+    """Per-source high-water marks, and the batch row, in a parquet
+    control table."""
 
     def __init__(self, path: str):
         self.path = path
 
-    def read(self, spark: SparkSession) -> dict[str, dt.datetime]:
-        """S9 — marks as a small driver-side dict (the table is O(#sources)).
+    def read(self, spark: SparkSession) -> ControlRecord:
+        """S9 — the record as a small driver-side dict (the table is
+        O(#sources)).
 
-        ONLY the missing-path (first run) case maps to {}; a corrupt or
-        unreadable control table re-raises. Swallowing it would silently
+        ONLY a missing path (first run) maps to an empty record. A
+        directory with no committed data file — what a failed overwrite
+        leaves — raises ``ControlTableError``, and an unreadable table
+        re-raises: either way, reading it as a first run would silently
         reset every high-water mark and make the next incremental run
         re-ingest full history into the append sink (duplicate rows)."""
         try:
-            rows = spark.read.schema(WATERMARKS).parquet(self.path).collect()
+            df = spark.read.schema(WATERMARKS).parquet(self.path)
+            committed = df.inputFiles()
         except AnalysisException as e:
             cond = getattr(e, "getCondition", e.getErrorClass)() or ""
             if "PATH_NOT_FOUND" in cond or "Path does not exist" in str(e):
-                return {}  # first run: no control table yet
+                return ControlRecord()  # first run: no control table yet
             raise
-        return {r["source"]: r["high_water_mark"] for r in rows}
+        if not committed:
+            raise ControlTableError(
+                f"control table {self.path} holds no committed parquet data "
+                "(a failed write?); restore it or remove the directory to reload"
+            )
+        record = ControlRecord()
+        for r in df.collect():
+            if r["source"] == BATCH_ROW:
+                record.landed, record.fingerprint = r["landed"], r["fingerprint"]
+            else:
+                record[r["source"]] = r["high_water_mark"]
+        return record
 
-    def write(self, spark: SparkSession, marks: dict[str, dt.datetime]) -> None:
-        """S10 — overwrite the control table. Call ONLY after the sink
+    def write(
+        self,
+        spark: SparkSession,
+        marks: dict[str, dt.datetime],
+        landed: int | None = None,
+        fingerprint: str | None = None,
+    ) -> None:
+        """S10 — overwrite the control table with the marks and, when
+        given, the batch row, in one write. Call ONLY after the sink
         committed (ordering fix per SURVEY.md §3.4). Naive marks are
         process-local time, as ``read`` returns them."""
-        df = local_frame(spark, sorted(marks.items()), WATERMARKS)
+        rows = [(s, m, None, None) for s, m in sorted(marks.items())]
+        if landed is not None or fingerprint is not None:
+            rows.append((BATCH_ROW, None, landed, fingerprint))
+        df = local_frame(spark, rows, WATERMARKS)
         df.coalesce(1).write.mode("overwrite").parquet(self.path)
 
 

@@ -260,13 +260,36 @@ def test_batch_noop_batch_lands_every_row(spark, bar_fixtures, tmp_path):
     added = _add_batch(dirs, 2)
     _build(spark, base, bar_fixtures["bar_data"], dirs)
     sales = spark.read.parquet(os.path.join(base, "global_sales"))
-    assert sales.count() == 20 + 15 + 11 + added
+    n = 20 + 15 + 11 + added
+    assert sales.count() == n
+    # saleID numbers on across batches: 0..n-1, none repeated
+    ids = sales.agg(F.min("saleID"), F.max("saleID"), F.countDistinct("saleID")).first()
+    assert tuple(ids) == (0, n - 1, n)
+
+
+def test_sale_id_continues_after_a_record_without_counts(spark, bar_fixtures, tmp_path):
+    """A control record written before it kept the rows landed numbers
+    the next batch from max(saleID)+1."""
+    dirs = _sales_dirs(bar_fixtures, tmp_path)
+    base = str(tmp_path / "db")
+    _build(spark, base, bar_fixtures["bar_data"], dirs)
+    store = WatermarkStore(os.path.join(base, "last_update"))
+    store.write(spark, dict(store.read(spark)))  # marks only, as before
+    assert store.read(spark).landed is None
+    added = _add_batch(dirs, 2)
+    _build(spark, base, bar_fixtures["bar_data"], dirs)
+    sales = spark.read.parquet(os.path.join(base, "global_sales"))
+    n = 20 + 15 + 11 + added
+    assert sales.select("saleID").distinct().count() == n
+    assert store.read(spark).landed == n
 
 
 # Spark jobs of one steady batch and one no-op re-run (nextJobId delta) at
 # local[2] and local[4]. With one watermark-filter-and-max job per source
 # and the sales sources re-scanned by every reader, they were 25 and 9.
-STEADY_BATCH_JOBS = 21
+# A steady batch skips both dimension writes (its stock file and fetched
+# records are unchanged): 17 jobs, against 21 when it rewrote them.
+STEADY_BATCH_JOBS = 17
 NOOP_RUN_JOBS = 3
 
 
@@ -288,3 +311,168 @@ def test_steady_batch_and_noop_job_counts(spark, bar_fixtures, tmp_path):
     noop = _next_job(spark) - j0
     assert batch <= STEADY_BATCH_JOBS, f"steady batch ran {batch} jobs"
     assert noop <= NOOP_RUN_JOBS, f"no-op re-run ran {noop} jobs"
+
+
+# --- dimension writes follow their inputs ---------------------------------
+
+
+def _data_files(base: str, table: str) -> dict[str, int]:
+    loc = os.path.join(base, table)
+    return {
+        f: os.stat(os.path.join(loc, f)).st_mtime_ns
+        for f in os.listdir(loc)
+        if not f.startswith((".", "_"))
+    }
+
+
+def _last_detail(spark, base: str, stage: str) -> str:
+    from cocktailsdb_spark.runlog import RunLog
+
+    hist = RunLog.history(spark, os.path.join(base, "run_history"))
+    return hist.filter(F.col("stage") == stage).orderBy(F.desc("started_at")).first()["detail"]
+
+
+def _oracle_problems(spark, base: str, bar_data: str, dirs: dict[str, str]) -> list[str]:
+    """poc_analysis against the reference PoC SQL over the same files."""
+    import duckdb
+
+    from cocktailsdb_spark.plans import reference_parity as rp
+    from tools.selfcheck import normalize
+
+    sql = (
+        rp.REFERENCE_POC_SQL.replace(rp.BAR_DATA, bar_data)
+        .replace(rp.BUDAPEST, f"{dirs['budapest']}/*.csv.gz")
+        .replace(rp.LONDON, f"{dirs['london']}/*.csv.gz")
+        .replace(rp.NY, f"{dirs['ny']}/*.csv.gz")
+    )
+    want = duckdb.connect().execute(sql).df()
+    db = bar_pipeline.bar_db_name(base)
+    got = spark.table(f"{db}.poc_analysis").toPandas()
+    if len(got) != len(want):
+        return [f"rowcount {len(got)} != {len(want)}"]
+    return [] if normalize(got) == normalize(want) else ["values differ"]
+
+
+def _rows(spark, base: str, table: str) -> list:
+    return sorted(spark.read.parquet(os.path.join(base, table)).collect(), key=str)
+
+
+def test_steady_batch_leaves_dimensions_untouched(spark, bar_fixtures, tmp_path):
+    """A batch whose stock file is unchanged and whose drinks are all in
+    the stored dim writes neither dimension, says so in the run log, and
+    still lands its rows and matches the oracle."""
+    dirs = _sales_dirs(bar_fixtures, tmp_path)
+    base = str(tmp_path / "db")
+    bar_data = bar_fixtures["bar_data"]
+    _build(spark, base, bar_data, dirs)
+    _add_batch(dirs, 2)  # brings 'spritz', a new drink
+    _build(spark, base, bar_data, dirs)
+    files = {t: _data_files(base, t) for t in ("bar_stock", "cocktails")}
+    _add_batch(dirs, 3)  # the same drinks again
+    _build(spark, base, bar_data, dirs)
+    assert {t: _data_files(base, t) for t in files} == files
+    assert _last_detail(spark, base, "sinks") == "skipped bar_stock, cocktails"
+    assert spark.read.parquet(os.path.join(base, "global_sales")).count() == 20 + 15 + 11 + 10
+    assert _oracle_problems(spark, base, bar_data, dirs) == []
+
+
+def test_new_drink_or_newer_record_rewrites_cocktails(spark, bar_fixtures, tmp_path):
+    """A batch that brings a new drink, or a transport record with a newer
+    dateModified, rewrites cocktails; the dim and poc_analysis then equal a
+    full load over the same inputs (and the PoC oracle)."""
+    from cocktailsdb_spark.sources.http_source import fake_transport
+
+    def newer_mojito(key):
+        recs = fake_transport(key)
+        if key == "mojito":
+            recs.append({**recs[0], "dateModified": "2021-02-01 10:00:00", "strGlass": "coupe"})
+        return recs
+
+    dirs = _sales_dirs(bar_fixtures, tmp_path)
+    base = str(tmp_path / "db")
+    bar_data = bar_fixtures["bar_data"]
+    _build(spark, base, bar_data, dirs)
+
+    before = _data_files(base, "cocktails")
+    _add_batch(dirs, 2)  # 'spritz' is new
+    _build(spark, base, bar_data, dirs)
+    assert _data_files(base, "cocktails").keys().isdisjoint(before)
+    assert _last_detail(spark, base, "sinks") == "skipped bar_stock"
+    full = str(tmp_path / "full")
+    _build(spark, full, bar_data, dirs)
+    assert _rows(spark, base, "cocktails") == _rows(spark, full, "cocktails")
+    assert _oracle_problems(spark, base, bar_data, dirs) == []
+
+    before = _data_files(base, "cocktails")
+    _add_batch(dirs, 3)  # known drinks, but mojito's record is newer
+    bar_pipeline.build_database(
+        spark, base, bar_data, dirs["budapest"], dirs["london"], dirs["ny"],
+        transport=newer_mojito,
+    )
+    assert _data_files(base, "cocktails").keys().isdisjoint(before)
+    full = str(tmp_path / "full_newer")
+    bar_pipeline.build_database(
+        spark, full, bar_data, dirs["budapest"], dirs["london"], dirs["ny"],
+        transport=newer_mojito,
+    )
+    assert _rows(spark, base, "cocktails") == _rows(spark, full, "cocktails")
+    mojito = [r for r in _rows(spark, base, "cocktails") if r["strDrink"] == "mojito"]
+    assert [(r["dateModified"], r["strGlass"]) for r in mojito] == [
+        ("2021-02-01 10:00:00", "coupe")
+    ]
+    assert _rows(spark, base, "poc_analysis") == _rows(spark, full, "poc_analysis")
+
+
+def test_changed_stock_without_sales_refreshes_dimensions(spark, bar_fixtures, tmp_path):
+    """A run with no new sales but an edited stock file does not
+    short-circuit: bar_stock and poc_analysis's comment follow the new
+    stock."""
+    dirs = _sales_dirs(bar_fixtures, tmp_path)
+    base = str(tmp_path / "db")
+    bar_data = str(tmp_path / "bar_data.csv")
+    shutil.copy(bar_fixtures["bar_data"], bar_data)
+    _build(spark, base, bar_data, dirs)
+    db = bar_pipeline.bar_db_name(base)
+    assert spark.table(f"{db}.poc_analysis").filter("comment = 'NO ISSUE'").count() > 0
+
+    with open(bar_data) as f:
+        header, *lines = f.read().splitlines()
+    out_of_stock = [f"{glass},0,{bar}" for glass, _, bar in (ln.split(",") for ln in lines)]
+    with open(bar_data, "w") as f:
+        f.write("\n".join([header, *out_of_stock]) + "\n")
+    _build(spark, base, bar_data, dirs)  # no new sales
+    assert {r["stock"] for r in spark.table(f"{db}.bar_stock").collect()} == {0}
+    poc = spark.table(f"{db}.poc_analysis").filter("stock IS NOT NULL")
+    assert {r["comment"] for r in poc.collect()} == {"POTENTIAL ISSUE"}
+    assert _oracle_problems(spark, base, bar_data, dirs) == []
+
+
+def test_control_table_without_committed_data_is_not_a_first_run(spark, tmp_path):
+    """Only a missing control table reads as a first run. A directory a
+    failed overwrite left empty, or holding only _SUCCESS, raises; a table
+    written before the batch row was kept reads with no count or
+    fingerprint."""
+    import datetime as dt
+
+    from cocktailsdb_spark.frames import local_frame
+    from cocktailsdb_spark.sources.watermark import ControlTableError
+
+    path = tmp_path / "last_update"
+    store = WatermarkStore(str(path))
+    assert store.read(spark) == {}
+    path.mkdir()
+    with pytest.raises(ControlTableError):
+        store.read(spark)
+    (path / "_SUCCESS").write_text("")
+    with pytest.raises(ControlTableError):
+        store.read(spark)
+
+    marks = {"budapest": dt.datetime(2020, 12, 26, 22, 47)}
+    local_frame(spark, marks.items(), "source string, high_water_mark timestamp").write.mode(
+        "overwrite"
+    ).parquet(str(path))
+    old = store.read(spark)
+    assert old == marks and old.landed is None and old.fingerprint is None
+    store.write(spark, marks, landed=46, fingerprint="abc")
+    new = store.read(spark)
+    assert new == marks and (new.landed, new.fingerprint) == (46, "abc")
