@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..numeric import dsum
+from ..session import conf_scope
 from ..tables import load
 
 WM = "2024-01-15 00:00:00"
@@ -135,9 +136,7 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Broadcast is disabled for this plan only — locally the tables are tiny
     and AQE would otherwise broadcast, hiding the property under test."""
     ensure_bucketed_tables(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         l = spark.table("bucketdemo.lineitem_b")
         o = spark.table("bucketdemo.orders_b")
         result = (
@@ -153,15 +152,6 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = result.cache()
         result.count()
         return result
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def bucketed_join_plan(spark: SparkSession, sf_dir: str):
-    """The unaggregated bucketed join, for plan assertions (no Exchange)."""
-    l = spark.table("bucketdemo.lineitem_b")
-    o = spark.table("bucketdemo.orders_b")
-    return l.join(o, l.l_orderkey == o.o_orderkey)
 
 
 BUCKETED_JOIN_SQL = """
@@ -358,23 +348,14 @@ def bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable dim, BHJ already avoids the fact shuffle) and the
     application-side threshold is lowered because the sf0.1 fact scan is
     ~50 MB, not the 10 GB default. The confs are restored afterwards."""
-    prev = {
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": spark.conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled"
-        ),
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": spark.conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-        ),
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-    )
-    try:
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+        },
+    ):
         o = load(spark, sf_dir, "orders").filter(
             (F.col("o_orderpriority") == "1-URGENT")
             & (F.col("o_totalprice") > 250000)
@@ -395,9 +376,6 @@ def bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = result.cache()
         result.count()
         return result
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
 
 
 BLOOM_JOIN_SQL = """

@@ -16,6 +16,7 @@ Conventions for oracle exactness:
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -23,6 +24,7 @@ from pyspark.sql import functions as F
 
 from . import conform
 from .numeric import dsum, qround, sql_dsum, sql_qround
+from .frames import local_frame
 from .constants import (
     BPE_TOKEN_RE,
     FP_MOD,
@@ -3348,19 +3350,23 @@ register(
 def _q_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two watermarked runs over the same sources: run 1 loads everything,
     run 2 loads 0 rows (idempotence). Control table + sink live in a temp
-    dir; marks advance only after the sink commits (§3.4 ordering fix)."""
+    dir, removed before the counts are returned; marks advance only after
+    the sink commits (§3.4 ordering fix)."""
     e = load(spark, sf_dir, "events")
     srcs = {
         "even": e.filter(F.col("user_id") % 2 == 0),
         "odd": e.filter(F.col("user_id") % 2 == 1),
     }
     work = tempfile.mkdtemp(prefix="cdbspark_wm_")
-    store = WatermarkStore(os.path.join(work, "marks"))
-    rows = []
-    for run in (1, 2):
-        loaded = incremental_load(spark, srcs, "ts", os.path.join(work, "sink"), store)
-        rows.extend((name, run, n) for name, n in sorted(loaded.items()))
-    return spark.createDataFrame(rows, "source string, run int, rows_loaded long")
+    try:
+        store = WatermarkStore(os.path.join(work, "marks"))
+        rows = []
+        for run in (1, 2):
+            loaded = incremental_load(spark, srcs, "ts", os.path.join(work, "sink"), store)
+            rows.extend((name, run, n) for name, n in sorted(loaded.items()))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return local_frame(spark, rows, "source string, run int, rows_loaded long")
 
 
 register(

@@ -11,6 +11,8 @@ parallelism at hand rather than the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -93,3 +95,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set each of ``conf`` on the session for the block. On exit, however
+    the block ends, a key set before gets its old value back and a key
+    that was unset is unset again."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

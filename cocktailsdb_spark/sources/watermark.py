@@ -16,8 +16,11 @@ rows landed so far (the next surrogate key) and the fingerprint of the
 dimension input the stored dimension was built from. A table written
 before those were kept reads with both as None.
 
-The streaming mapping of the same protocol (checkpoint-backed
-``withWatermark``) is in cocktailsdb_spark.streaming.
+The streaming mapping of the same protocol is
+``streaming_restart_exactly_once`` in cocktailsdb_spark.streaming: a file
+stream whose checkpoint (source offsets plus the sink's commit log) takes
+the place of the marks, stopped mid-input and resumed so that each file
+lands exactly once.
 """
 
 from __future__ import annotations

@@ -2,33 +2,62 @@
 (SURVEY.md §2.7): the streaming mappings of the reference's batch-
 incremental watermark protocol.
 
-These run a real ``readStream`` → transform → ``writeStream`` topology to
-completion over the fixture parquet (file source + memory/parquet sink),
-so the plans exercised are the ones a Kafka-backed deployment would run;
-only the source format differs. Checkpoints replace last_update.txt.
+Each entry runs a real ``readStream`` → transform → ``writeStream``
+topology to completion over the fixture parquet (file source; memory,
+parquet or ``foreachBatch`` sink), so the plans exercised are the ones a
+Kafka-backed deployment would run; only the source format differs.
+Checkpoints replace last_update.txt.
 
-Determinism: the tumbling query runs in COMPLETE mode (every window
-emitted). The session query runs in APPEND mode with a watermark, which
-only emits sessions once the watermark passes them — so the driver feeds a
-sentinel batch far in the future to flush all real sessions, then filters
-the sentinel back out. Both therefore equal their batch twins exactly and
-carry full DuckDB oracles.
+Lifecycle. An entry is a transform handed to one runner, :func:`_run`,
+which owns everything around it:
+
+- a scratch directory for the input files and the checkpoint, removed in
+  a ``finally``, so a stream that fails leaves nothing behind either;
+- the input. File streams need a directory source, so the events table
+  (or the frames an entry supplies) is written there once. Each frame
+  lands as its own directory and is read as one micro-batch;
+- the session settings, through ``session.conf_scope``: 8 shuffle
+  partitions plus the entry's own confs. Stateful operators allocate a
+  state store per shuffle partition per operator side, and at fixture
+  scale the fixed store setup dominates; on a real cluster the count is
+  sized to key cardinality and state volume, not CPU count;
+- start → drain → stop for every query, including the sentinel flush and
+  the restart below;
+- the readout. A memory-sink result is a ``LocalTableScan`` over rows the
+  driver already holds, so the runner takes the frame, drops the sink's
+  temp view and returns the frame: nothing is cached, no view is left,
+  and the rows live exactly as long as the caller's frame. A file sink
+  (``parquet``, or a ``foreachBatch`` that writes files) leaves its output
+  in one kept directory per process, removed at interpreter exit, and the
+  result is read from there.
+
+Determinism. COMPLETE-mode queries emit every window. APPEND-mode queries
+with a watermark emit a row only once the watermark passes it, so the
+runner feeds them a sentinel batch far in the future, which flushes every
+real session and join interval, then filters the sentinel back out. With
+the fixture in one micro-batch every entry equals its batch twin exactly
+and carries a full DuckDB oracle.
 """
 
 from __future__ import annotations
 
 import atexit
+import datetime as dt
+import glob
 import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import SESSION_GAP_SEC
-from ..numeric import dsum
+from ..frames import local_frame
+from ..numeric import dsum, qround
 from ..plans.hints import maybe_broadcast
+from ..session import conf_scope
 from ..tables import load
 
 EVENTS_DDL = (
@@ -38,67 +67,137 @@ EVENTS_DDL = (
 
 SENTINEL_USER = -1
 
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _low_shuffle(spark: SparkSession, n: int = 8):
-    """Stateful streaming operators allocate state stores PER shuffle
-    partition per operator side; at local fixture scale the fixed store
-    setup dominates wall-clock. Run the query at a small partition count
-    and restore the session's setting after. On a real cluster this knob
-    is sized to key cardinality / state volume, not CPU count."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _events_stream(
-    spark: SparkSession, input_dir: str, max_files: int = 1
-) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", str(max_files))
-        .load(input_dir)
+# The production backend for large state: the default HDFS-backed provider
+# keeps every key in executor heap (OOM at big-state scale); RocksDB keeps
+# working state on local disk with block-cache reads and supports
+# changelog checkpointing. Same API, one conf.
+ROCKSDB_STATE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
+}
+
+Source = Callable[[], DataFrame]
+FileSink = Callable[[DataFrame, int, str], None]
+
+_KEPT: list[str] = []
 
 
-def _materialize_events(
-    spark: SparkSession, sf_dir: str, workdir: str, parts: int = 1
-) -> str:
-    """File streams need a DIRECTORY source; write the (ns→µs converted)
-    events there once and stream from it.
-
-    ``parts=1`` (default) → one part file → deterministic micro-batch
-    boundaries under ``maxFilesPerTrigger=1`` (update-mode sinks would
-    otherwise record per-batch intermediate state). Callers whose
-    readout is multi-batch-safe (e.g. the funnel's max-level rollup) can
-    pass ``parts>1`` for a parallel write AND a parallel scan — a single
-    coalesced file is written by ONE task and read by ONE task (one row
-    group — the round-10 fixture-layout lesson), which serializes the
-    whole pipeline at sf10. Such callers must raise maxFilesPerTrigger
-    to ≥ parts so the batch boundary stays deterministic (all files in
-    one trigger)."""
-    input_dir = os.path.join(workdir, "in")
-    df = load(spark, sf_dir, "events")
-    df = df.coalesce(1) if parts <= 1 else df.repartition(parts)
-    df.write.mode("overwrite").parquet(os.path.join(input_dir, "batch1.parquet"))
-    return input_dir
+def _kept() -> str:
+    """A fresh path in the process's one kept directory, which is made on
+    first use and removed at interpreter exit."""
+    if not _KEPT:
+        _KEPT.append(tempfile.mkdtemp(prefix="cdbspark_stream_kept_"))
+        atexit.register(shutil.rmtree, _KEPT[0], ignore_errors=True)
+    return os.path.join(_KEPT[0], uuid.uuid4().hex)
 
 
-def streaming_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour tumbling count+sum over a parquet file stream, complete mode.
-    Result (a static DataFrame) equals the batch tumbling query exactly."""
-    name = "stream_tumbling_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_tumb_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-    stream = (
-        _events_stream(spark, input_dir + "/*")
+def _land(src: str, arrival: int, frames: list[DataFrame]) -> int:
+    """Write each frame as its own input directory; return the most part
+    files any of them holds (the files one micro-batch reads)."""
+    most = 1
+    for j, frame in enumerate(frames):
+        path = os.path.join(src, f"{arrival}-{j}.parquet")
+        frame.write.parquet(path)
+        most = max(most, len(glob.glob(os.path.join(path, "*.parquet"))))
+    return most
+
+
+def _whole(source: Source) -> DataFrame:
+    return source()
+
+
+def _run(
+    spark: SparkSession,
+    sf_dir: str,
+    build: Callable[[Source], DataFrame],
+    sink: str | FileSink = "append",
+    *,
+    inputs: list[list[DataFrame]] | None = None,
+    flush: tuple[str, ...] = (),
+    conf: dict[str, str] | None = None,
+    restart: bool = False,
+    read: Callable[[str], DataFrame] | None = None,
+) -> DataFrame:
+    """Run one entry's stream to completion and return its result.
+
+    ``build`` maps ``source`` (each call opens a new file stream over the
+    input directory) to the streaming frame to sink. ``sink`` is an output
+    mode of the memory sink, ``"parquet"`` for a file sink, or a
+    ``foreachBatch`` function ``(batch, epoch_id, out)`` that leaves its
+    output at ``out``. ``read`` (default ``spark.read.parquet``) turns a
+    file sink's kept output path into the result.
+
+    ``inputs`` lists the arrivals, each a list of frames; the default is
+    the events table as one file. An arrival lands once the stream has
+    drained the ones before it; with ``restart`` the query is stopped
+    before each later arrival lands and a new one resumes from the
+    checkpoint. ``flush`` names the event types of a sentinel arrival
+    10 days past the last event."""
+    work = tempfile.mkdtemp(prefix="cdbspark_stream_")
+    src, ckpt = os.path.join(work, "in"), os.path.join(work, "ckpt")
+    name = "stream_" + uuid.uuid4().hex[:8]
+    memory = isinstance(sink, str) and sink != "parquet"
+    out = None if memory else _kept()
+    try:
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8", **(conf or {})}):
+            if inputs is None or flush:
+                events = load(spark, sf_dir, "events")
+            arrivals = inputs or [[events.coalesce(1)]]
+            if flush:
+                far = events.agg(F.max("ts")).first()[0] + dt.timedelta(days=10)
+                rows = [
+                    (10**9 + i, far, SENTINEL_USER, event_type, 0.0, "{}")
+                    for i, event_type in enumerate(flush)
+                ]
+                arrivals = [*arrivals, [local_frame(spark, rows, EVENTS_DDL).coalesce(1)]]
+            per_trigger = _land(src, 0, arrivals[0])
+
+            def source() -> DataFrame:
+                return (
+                    spark.readStream.schema(arrivals[0][0].schema)
+                    .option("maxFilesPerTrigger", str(per_trigger))
+                    .parquet(src + "/*")
+                )
+
+            def start():
+                w = build(source).writeStream.option("checkpointLocation", ckpt)
+                if memory:
+                    w = w.format("memory").outputMode(sink).queryName(name)
+                elif callable(sink):
+                    w = w.foreachBatch(lambda batch, epoch_id: sink(batch, epoch_id, out))
+                else:
+                    w = w.format("parquet").option("path", out)
+                return w.start()
+
+            q = start()
+            try:
+                q.processAllAvailable()
+                for i, frames in enumerate(arrivals[1:], start=1):
+                    if restart:
+                        q.stop()
+                    _land(src, i, frames)
+                    if restart:
+                        q = start()
+                    q.processAllAvailable()
+            finally:
+                q.stop()
+        if memory:
+            result = spark.table(name)
+            return result.filter(F.col("user_id") != SENTINEL_USER) if flush else result
+        return (read or spark.read.parquet)(out)
+    except BaseException:
+        if out:
+            shutil.rmtree(out, ignore_errors=True)
+        raise
+    finally:
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _tumbling(source: Source) -> DataFrame:
+    return (
+        source()
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("sum_value"))
@@ -106,16 +205,21 @@ def streaming_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "n", "sum_value"
         )
     )
-    with _low_shuffle(spark):
-        q = stream.writeStream.outputMode("complete").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    result = spark.table(name).cache()
-    result.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return result
+
+
+def streaming_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-hour tumbling count+sum over a parquet file stream, complete mode.
+    Result (a static DataFrame) equals the batch tumbling query exactly."""
+    return _run(spark, sf_dir, _tumbling, "complete")
+
+
+def streaming_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """streaming_tumbling_hour's stream on the RocksDB state store —
+    bit-identical results (same oracle): the state BACKEND must never
+    change query semantics, and this entry pins that. State lives
+    off-heap on executor-local disk, which is what makes billion-key
+    watermarked aggregations feasible at 100 TB."""
+    return _run(spark, sf_dir, _tumbling, "complete", conf=ROCKSDB_STATE)
 
 
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,53 +228,28 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Batch 1 = the real events; batch 2 = one sentinel event 10 days past
     max(ts), which advances the event-time watermark beyond every real
-    session so append mode flushes them all. Output (sentinel removed)
-    equals the batch session computation."""
-    static = load(spark, sf_dir, "events")
-    max_ts = static.agg(F.max("ts")).first()[0]
+    session so append mode flushes them all (no-data batches then
+    evict/emit the remaining state). Output (sentinel removed) equals the
+    batch session computation."""
 
-    workdir = tempfile.mkdtemp(prefix="cdbspark_sess_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-    name = "stream_session_" + uuid.uuid4().hex[:8]
+    def build(source: Source) -> DataFrame:
+        return (
+            source()
+            .withWatermark("ts", "30 minutes")
+            .groupBy(
+                F.session_window("ts", f"{SESSION_GAP_SEC} seconds").alias("w"),
+                "user_id",
+            )
+            .agg(F.count("*").alias("n_events"))
+            .select(
+                "user_id",
+                F.col("w.start").alias("session_start"),
+                F.col("w.end").alias("session_end"),
+                "n_events",
+            )
+        )
 
-    sessions = (
-        _events_stream(spark, input_dir + "/*")
-        .withWatermark("ts", "30 minutes")
-        .groupBy(F.session_window("ts", f"{SESSION_GAP_SEC} seconds").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    with _low_shuffle(spark):
-      q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .start()
-      )
-      try:
-        q.processAllAvailable()
-        # batch 2: sentinel far in the future → watermark passes every
-        # real session; no-data batches then evict/emit remaining state.
-        sentinel = spark.createDataFrame(
-            [(10**9, max_ts + __import__("datetime").timedelta(days=10), SENTINEL_USER, "sentinel", 0.0, "{}")],
-            schema=EVENTS_DDL,
-        )
-        sentinel.write.mode("overwrite").parquet(os.path.join(input_dir, "batch2.parquet"))
-        q.processAllAvailable()
-      finally:
-        q.stop()
-    out = spark.table(name).filter(F.col("user_id") != SENTINEL_USER)
-    # materialize before the tempdir vanishes
-    result = out.cache()
-    result.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return result
+    return _run(spark, sf_dir, build, flush=("sentinel",))
 
 
 def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,24 +258,13 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits each key's first arrival. Projected to the key columns the
     output is the deterministic distinct-key set (arrival order decides
     which row wins, so non-key columns are not part of the contract)."""
-    name = "stream_dedup_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_dedup_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-    stream = (
-        _events_stream(spark, input_dir + "/*")
+    return _run(
+        spark,
+        sf_dir,
+        lambda source: source()
         .select("user_id", "event_type")
-        .dropDuplicates(["user_id", "event_type"])
+        .dropDuplicates(["user_id", "event_type"]),
     )
-    with _low_shuffle(spark):
-        q = stream.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    result = spark.table(name).cache()
-    result.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return result
 
 
 def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,26 +275,15 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     between a dedup stream that runs for years and one that OOMs).
     With the fixture in one batch every duplicate falls inside the
     watermark, so the output is exactly the distinct key set (the oracle)."""
-    name = "stream_ddww_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_ddww_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-    stream = (
-        _events_stream(spark, input_dir + "/*")
+    return _run(
+        spark,
+        sf_dir,
+        lambda source: source()
         .withWatermark("ts", "1 hour")
         .select("user_id", "event_type", "ts")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("user_id", "event_type")
+        .select("user_id", "event_type"),
     )
-    with _low_shuffle(spark):
-        q = stream.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    result = spark.table(name).cache()
-    result.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return result
 
 
 DEDUP_WITHIN_WM_SQL = "SELECT DISTINCT user_id, event_type FROM events"
@@ -243,10 +300,6 @@ def streaming_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFram
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    name = "stream_state_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_state_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-
     def count_events(key, pdf_iter, state: GroupState):
         running = state.get[0] if state.exists else 0
         for pdf in pdf_iter:
@@ -254,8 +307,10 @@ def streaming_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFram
         state.update((running,))
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [running]})
 
-    stream = (
-        _events_stream(spark, input_dir + "/*")
+    return _run(
+        spark,
+        sf_dir,
+        lambda source: source()
         .groupBy("user_id")
         .applyInPandasWithState(
             count_events,
@@ -263,18 +318,9 @@ def streaming_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFram
             stateStructType="n long",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        "update",
     )
-    with _low_shuffle(spark):
-        q = stream.writeStream.outputMode("update").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    result = spark.table(name).cache()
-    result.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return result
 
 
 def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -282,26 +328,56 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer dim (broadcast per micro-batch — the streaming analog of the
     reference's cocktails-dim enrichment), aggregated per market segment.
     Complete mode; equals the batch join exactly."""
-    name = "stream_sj_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_sj_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
     customer = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    stream = (
-        _events_stream(spark, input_dir + "/*")
-        .join(maybe_broadcast(customer, "customer"), F.col("user_id") == F.col("c_custkey"), "inner")
+    return _run(
+        spark,
+        sf_dir,
+        lambda source: source()
+        .join(
+            maybe_broadcast(customer, "customer"),
+            F.col("user_id") == F.col("c_custkey"),
+            "inner",
+        )
         .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_events"), dsum(F.col("value")).alias("sum_value"))
+        .agg(F.count("*").alias("n_events"), dsum(F.col("value")).alias("sum_value")),
+        "complete",
     )
-    with _low_shuffle(spark):
-        q = stream.writeStream.outputMode("complete").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    result = spark.table(name).cache()
-    result.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return result
+
+
+def _interval_join(source: Source, how: str) -> DataFrame:
+    """Clicks joined to the same user's purchases within
+    [click_ts, click_ts+30min]; each side is its own file stream with a
+    1-hour watermark."""
+    clicks = (
+        source()
+        .filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "1 hour")
+    )
+    purchases = (
+        source()
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    return clicks.join(
+        purchases,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
+    ).select(
+        "click_id", "purchase_id", F.col("c_user").alias("user_id"),
+        "click_ts", "purchase_ts",
+    )
 
 
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,49 +390,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical funnel/attribution topology. Inner stream-stream joins emit
     matches as they arrive, so the complete output equals the batch
     interval join exactly (the DuckDB oracle)."""
-    name = "stream_ij_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_ij_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-    base = _events_stream(spark, input_dir + "/*")
-    clicks = (
-        base.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, input_dir + "/*")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner",
-    ).select(
-        "click_id", "purchase_id", F.col("c_user").alias("user_id"),
-        "click_ts", "purchase_ts",
-    )
-    with _low_shuffle(spark):
-        q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    result = spark.table(name).cache()
-    result.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return result
+    return _run(spark, sf_dir, lambda source: _interval_join(source, "inner"))
 
 
 STREAM_INTERVAL_JOIN_SQL = """
@@ -377,81 +411,18 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     This is the shape the inner join cannot express: a row can only be
     declared UNMATCHED once the watermark has passed its whole join
     interval (until then a matching purchase could still arrive), so null
-    rows are emitted on WATERMARK EXPIRY, not on arrival. The driver feeds
-    a far-future sentinel batch on both sides to push the watermark past
-    every real interval — exactly the session_window flush pattern — then
-    filters the sentinel back out. The complete output therefore equals
-    the batch LEFT JOIN (the DuckDB oracle); join state stays bounded by
-    the watermark horizon either way."""
-    name = "stream_ijo_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_ijo_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-    static = load(spark, sf_dir, "events")
-    max_ts = static.agg(F.max("ts")).first()[0]
-
-    clicks = (
-        _events_stream(spark, input_dir + "/*")
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
+    rows are emitted on WATERMARK EXPIRY, not on arrival. The sentinel
+    batch holds one far-future click AND purchase, which advance both
+    sides' watermarks past every real interval and force the expiry scan
+    that emits the null-padded rows — the session_window flush. The
+    output therefore equals the batch LEFT JOIN (the DuckDB oracle); join
+    state stays bounded by the watermark horizon either way."""
+    return _run(
+        spark,
+        sf_dir,
+        lambda source: _interval_join(source, "left_outer"),
+        flush=("click", "purchase"),
     )
-    purchases = (
-        _events_stream(spark, input_dir + "/*")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
-        "click_id", "purchase_id", F.col("c_user").alias("user_id"),
-        "click_ts", "purchase_ts",
-    )
-    with _low_shuffle(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # sentinel batch: one far-future click AND purchase advance
-            # both side's watermarks past every real interval, forcing
-            # the expiry scan that emits the null-padded rows.
-            far = max_ts + __import__("datetime").timedelta(days=10)
-            sentinel = spark.createDataFrame(
-                [
-                    (10**9, far, SENTINEL_USER, "click", 0.0, "{}"),
-                    (10**9 + 1, far, SENTINEL_USER, "purchase", 0.0, "{}"),
-                ],
-                schema=EVENTS_DDL,
-            )
-            sentinel.write.mode("overwrite").parquet(
-                os.path.join(input_dir, "batch2.parquet")
-            )
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    result = (
-        spark.table(name).filter(F.col("user_id") != SENTINEL_USER).cache()
-    )
-    result.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return result
 
 
 STREAM_INTERVAL_JOIN_OUTER_SQL = """
@@ -471,66 +442,32 @@ def streaming_foreach_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     where MERGE INTO lives in real deployments; here the merge is the
     engine's own latest_wins over plain parquet versions).
 
-    The input is deliberately split into TWO files (odd/even users) so the
+    The input is deliberately split into TWO files (even/odd users) so the
     state genuinely evolves across batches. Because latest-wins is
     commutative/associative over the union of batches, the final state
     equals the batch dedup_latest_wins over all events — the exact oracle —
-    regardless of micro-batch order."""
+    regardless of micro-batch order. The final state can be arbitrarily
+    large (one row per key), so it never transits the driver: the result
+    is a plain distributed read of the last version."""
     from ..operators.dedup import latest_wins
 
-    workdir = tempfile.mkdtemp(prefix="cdbspark_fbm_")
-    input_dir = os.path.join(workdir, "in")
-    ev = load(spark, sf_dir, "events")
-    ev.filter(F.col("user_id") % 2 == 0).coalesce(1).write.parquet(
-        os.path.join(input_dir, "batch_a.parquet")
-    )
-    ev.filter(F.col("user_id") % 2 == 1).coalesce(1).write.parquet(
-        os.path.join(input_dir, "batch_b.parquet")
-    )
-
-    state_holder: list[str | None] = [None]
-
-    def apply_batch(bdf: DataFrame, epoch_id: int) -> None:
-        batch_latest = latest_wins(
-            bdf.select("user_id", "event_id", "ts", "event_type", "value"),
+    def merge(batch: DataFrame, epoch_id: int, out: str) -> None:
+        state = latest_wins(
+            batch.select("user_id", "event_id", "ts", "event_type", "value"),
             ["user_id"],
             ["ts", "event_id"],
         )
-        if state_holder[0] is not None:
-            merged = latest_wins(
-                spark.read.parquet(state_holder[0]).unionByName(batch_latest),
-                ["user_id"],
-                ["ts", "event_id"],
+        if os.path.exists(out):
+            state = latest_wins(
+                spark.read.parquet(out).unionByName(state), ["user_id"], ["ts", "event_id"]
             )
-        else:
-            merged = batch_latest
-        out = os.path.join(workdir, f"state_{epoch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        state_holder[0] = out
+        state.write.parquet(out + ".next")
+        shutil.rmtree(out, ignore_errors=True)
+        os.rename(out + ".next", out)
 
-    with _low_shuffle(spark):
-        q = (
-            _events_stream(spark, input_dir + "/*")
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    # the final state can be arbitrarily large (one row per key), so it
-    # must never transit the driver: move the last state version out of
-    # the scratch dir to a stable path and return a plain distributed
-    # read of it — the caller sees a normal parquet-backed DataFrame.
-    keep_dir = tempfile.mkdtemp(prefix="cdbspark_fbm_state_")
-    # reclaim the kept state at interpreter exit — repeated driver rounds /
-    # test runs must not accumulate one parquet dir per invocation in /tmp
-    atexit.register(shutil.rmtree, keep_dir, ignore_errors=True)
-    final_dir = os.path.join(keep_dir, "final_state")
-    shutil.move(state_holder[0], final_dir)
-    shutil.rmtree(workdir, ignore_errors=True)
-    return spark.read.parquet(final_dir)
+    ev = load(spark, sf_dir, "events")
+    halves = [ev.filter(F.col("user_id") % 2 == r).coalesce(1) for r in (0, 1)]
+    return _run(spark, sf_dir, _whole, merge, inputs=[halves])
 
 
 FOREACH_MERGE_SQL = """
@@ -540,9 +477,6 @@ SELECT user_id, event_id, ts, event_type, value FROM (
                             ORDER BY ts DESC, event_id DESC) AS rn
   FROM events) WHERE rn = 1
 """
-
-
-DOCS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
 
 
 def streaming_postings_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,65 +491,28 @@ def streaming_postings_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     of streaming_foreach_merge's dimension maintenance: the corpus is
     tokenized exactly once, as it arrives."""
     from ..operators import retrieval
+    from ..sources.formats import _read_manifest
 
-    workdir = tempfile.mkdtemp(prefix="cdbspark_spu_")
-    input_dir = os.path.join(workdir, "in")
-    docs = load(spark, sf_dir, "documents")
-    for residue in range(3):
-        docs.filter(F.col("doc_id") % 3 == residue).coalesce(1).write.parquet(
-            os.path.join(input_dir, f"batch_{residue}.parquet")
-        )
-
-    keep_dir = tempfile.mkdtemp(prefix="cdbspark_spu_ix_")
-    atexit.register(shutil.rmtree, keep_dir, ignore_errors=True)
-    ix = os.path.join(keep_dir, "postings_ix")
-    src_marker = os.path.join(input_dir, "batch_0.parquet")
-
-    def apply_batch(bdf: DataFrame, epoch_id: int) -> None:
-        from ..sources.formats import _read_manifest
-
-        if bdf.isEmpty():
+    def upsert(batch: DataFrame, epoch_id: int, ix: str) -> None:
+        if batch.isEmpty():
             return
         if _read_manifest(ix, "_MANIFEST"):
-            retrieval.postings_index_upsert(spark, ix, bdf)
+            retrieval.postings_index_upsert(spark, ix, batch)
         else:
-            retrieval.postings_index_write(spark, bdf, ix, src_marker)
+            retrieval.postings_index_write(
+                spark, batch, ix, os.path.join(sf_dir, "documents.parquet")
+            )
 
-    with _low_shuffle(spark):
-        q = (
-            spark.readStream.format("parquet")
-            .schema(DOCS_DDL)
-            .option("maxFilesPerTrigger", "1")
-            .load(input_dir + "/*")
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return retrieval.bm25_rank_stored(spark, ix)
-
-
-def streaming_incremental_append(
-    spark: SparkSession, source_dir: str, sink_dir: str, checkpoint_dir: str
-) -> None:
-    """S9/S10 streaming mapping: file-source stream appended to a parquet
-    sink with a checkpoint as the high-water-mark state. Each call processes
-    only files not yet recorded in the checkpoint (exactly the reference's
-    incremental contract, minus its advance-before-sink bug)."""
-    stream = _events_stream(spark, source_dir)
-    q = (
-        stream.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    docs = load(spark, sf_dir, "documents")
+    thirds = [docs.filter(F.col("doc_id") % 3 == r).coalesce(1) for r in range(3)]
+    return _run(
+        spark,
+        sf_dir,
+        _whole,
+        upsert,
+        inputs=[thirds],
+        read=lambda ix: retrieval.bm25_rank_stored(spark, ix),
     )
-    q.awaitTermination()
 
 
 def streaming_sliding_halfhour(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -630,89 +527,16 @@ def streaming_sliding_halfhour(spark: SparkSession, sf_dir: str) -> DataFrame:
     store holds (2 × distinct windows in the watermark horizon) rows —
     sizing is slide-bound, not event-bound, which is why a 1h/30m hop is
     cheap but a 1h/1s hop is the classic misconfiguration."""
-    name = "stream_sliding_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_slide_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-    stream = (
-        _events_stream(spark, input_dir + "/*")
+    return _run(
+        spark,
+        sf_dir,
+        lambda source: source()
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "n")
+        .select(F.col("w.start").alias("window_start"), "n"),
+        "complete",
     )
-    with _low_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    result = spark.table(name).cache()
-    result.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return result
-
-
-@contextmanager
-def _rocksdb_state(spark: SparkSession):
-    """Run a streaming query under the RocksDB state store provider —
-    the production backend for large state: the default HDFS-backed
-    provider keeps every key in executor heap (OOM at big-state scale),
-    RocksDB keeps working state on local disk with block-cache reads and
-    supports changelog checkpointing. Same API, one conf."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def streaming_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tumbling-window stream executed on the RocksDB state store —
-    bit-identical results to streaming_tumbling_hour (same oracle): the
-    state BACKEND must never change query semantics, and this entry pins
-    that. State lives off-heap on executor-local disk, which is what
-    makes billion-key watermarked aggregations feasible at 100 TB."""
-    name = "stream_rocks_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_rocks_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-    stream = (
-        _events_stream(spark, input_dir + "/*")
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n", "sum_value"
-        )
-    )
-    with _low_shuffle(spark), _rocksdb_state(spark):
-        q = (
-            stream.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    result = spark.table(name).cache()
-    result.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return result
 
 
 def streaming_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -729,50 +553,10 @@ def streaming_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
     incarnation two resumes from the checkpoint and drains. This is the
     crash-recovery contract a production pipeline actually relies on —
     checkpoint = source offsets + sink epoch log, not just state."""
-    workdir = tempfile.mkdtemp(prefix="cdbspark_restart_")
-    src_dir = os.path.join(workdir, "in")
-    sink_dir = os.path.join(workdir, "sink")
-    ckpt_dir = os.path.join(workdir, "ckpt")
-    os.makedirs(src_dir)
     ev = load(spark, sf_dir, "events").select("event_id", "event_type")
-    parts = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-
-    def _write_file(i: int) -> None:
-        parts[i].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(src_dir, f"f{i}.parquet")
-        )
-
-    def _incarnation() -> None:
-        q = (
-            spark.readStream.format("parquet")
-            .schema("event_id long, event_type string")
-            .option("maxFilesPerTrigger", "1")
-            .load(src_dir + "/*")
-            .writeStream.format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()  # "crash": the query object is gone for good
-
-    with _low_shuffle(spark):
-        _write_file(0)
-        _incarnation()
-        _write_file(1)  # arrive while the pipeline is down
-        _write_file(2)
-        _incarnation()  # resume from checkpoint only
-    out = (
-        spark.read.parquet(sink_dir)
-        .groupBy("event_type")
-        .agg(F.count("*").cast("long").alias("n"))
-        .cache()
-    )
-    out.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+    f0, f1, f2 = (ev.filter(F.col("event_id") % 3 == i).coalesce(1) for i in range(3))
+    sunk = _run(spark, sf_dir, _whole, "parquet", inputs=[[f0], [f1, f2]], restart=True)
+    return sunk.groupBy("event_type").agg(F.count("*").cast("long").alias("n"))
 
 
 def streaming_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -801,10 +585,6 @@ def streaming_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ATTR_TOUCH_TYPES,
     )
 
-    name = "stream_attr_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_attr_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-
     touch_set = set(ATTR_TOUCH_TYPES)
 
     def credit(key, pdf_iter, state: GroupState):
@@ -824,8 +604,10 @@ def streaming_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"conv_id": conv_ids, "channel": channels, "value": values}
         )
 
-    stream = (
-        _events_stream(spark, input_dir + "/*")
+    credits = _run(
+        spark,
+        sf_dir,
+        lambda source: source()
         .groupBy("user_id")
         .applyInPandasWithState(
             credit,
@@ -833,32 +615,17 @@ def streaming_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
             stateStructType="last_channel string",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        "update",
     )
-    with _low_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    out = (
-        spark.table(name)
-        .groupBy("channel")
+    return (
+        credits.groupBy("channel")
         .agg(
             F.count("*").cast("long").alias("n_conversions"),
             dsum(F.col("value")).alias("attributed_revenue"),
         )
         .orderBy("channel")
-        .cache()
     )
-    out.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
 
 
 def streaming_error_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -871,34 +638,20 @@ def streaming_error_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the streaming_last_touch twin convention)."""
     from ..operators import events as ev_ops
 
-    name = "stream_burn_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_burn_")
-    input_dir = _materialize_events(spark, sf_dir, workdir)
-    stream = (
-        _events_stream(spark, input_dir + "/*")
+    hourly = _run(
+        spark,
+        sf_dir,
+        lambda source: source()
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
             F.sum((F.col("event_type") == "error").cast("int")).alias("n_errors"),
         )
-        .select(F.col("w.start").alias("hour"), "n_events", "n_errors")
+        .select(F.col("w.start").alias("hour"), "n_events", "n_errors"),
+        "complete",
     )
-    with _low_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    out = ev_ops.burn_readout(spark.table(name)).cache()
-    out.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+    return ev_ops.burn_readout(hourly)
 
 
 def streaming_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -925,11 +678,11 @@ def streaming_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Arrow transfer and Python workers see only funnel-relevant rows;
     (b) the per-user advance is vectorized — one numpy first-hit scan
     per REMAINING level (|steps| array ops) instead of a Python loop
-    over every event; (c) the source is materialized as a multi-file
-    batch and the state stage runs at defaultParallelism once the event
-    count warrants the extra state stores (the max-level readout is
-    multi-batch-safe, so all files ride ONE trigger and batch
-    boundaries stay deterministic).
+    over every event; (c) past ~200k events the per-event work dwarfs
+    state-store setup, so the source lands as one multi-file frame (a
+    parallel write AND a parallel scan, all files in ONE trigger) and the
+    state stage runs at defaultParallelism; at fixture scale it keeps the
+    single file and 8 state stores.
     """
     import numpy as np
     import pandas as pd
@@ -940,16 +693,9 @@ def streaming_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     steps = list(FUNNEL_STEPS)
     horizon_ns = WF_WINDOW_MIN * 60 * 1_000_000_000
 
-    name = "stream_wfunnel_" + uuid.uuid4().hex[:8]
-    workdir = tempfile.mkdtemp(prefix="cdbspark_wfun_")
-    n_events = load(spark, sf_dir, "events").count()
-    # fixture scale keeps the 8-store single-file layout; past ~200k
-    # events the per-event work dwarfs state-store setup, so spend the
-    # full core count on both the scan and the state stage
+    events = load(spark, sf_dir, "events")
     par = spark.sparkContext.defaultParallelism
-    wide = n_events > 200_000
-    n_parts = par if wide else 1
-    input_dir = _materialize_events(spark, sf_dir, workdir, parts=n_parts)
+    wide = events.count() > 200_000
 
     def advance(key, pdf_iter, state: GroupState):
         t1, tk, level = state.get if state.exists else (None, None, 0)
@@ -977,8 +723,10 @@ def streaming_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((t1, tk, level))
         yield pd.DataFrame({"u": [key[0]], "level": [level]})
 
-    stream = (
-        _events_stream(spark, input_dir + "/*", max_files=max(n_parts, 1))
+    levels = _run(
+        spark,
+        sf_dir,
+        lambda source: source()
         .filter(F.col("event_type").isin(steps))
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -987,50 +735,34 @@ def streaming_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             stateStructType="t1 long, tk long, level int",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
+        "update",
+        inputs=[[events.repartition(par)]] if wide else None,
+        conf={"spark.sql.shuffle.partitions": str(par)} if wide else None,
+    )
+    # one pass over the final levels counts every level's reach; the
+    # levels then unfold into one row each
+    reach = levels.groupBy("u").agg(F.max("level").alias("lvl")).agg(
+        *(
+            F.count(F.when(F.col("lvl") >= k, 1)).alias(f"n{k}")
+            for k in range(1, len(steps) + 1)
         )
     )
-    with _low_shuffle(spark, n=par if wide else 8):
-        q = (
-            stream.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
+    per_level = F.explode(
+        F.array(
+            *(
+                F.struct(
+                    F.lit(k).cast("int").alias("level"),
+                    F.lit(step).alias("step"),
+                    F.col(f"n{k}").alias("n_users"),
+                )
+                for k, step in enumerate(steps, start=1)
+            )
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finals = (
-        spark.table(name)
-        .groupBy("u")
-        .agg(F.max("level").alias("lvl"))
-        .filter(F.col("lvl") >= 1)
     )
-    per_level = None
-    for k, step in enumerate(steps, start=1):
-        row = finals.filter(F.col("lvl") >= k).agg(
-            F.lit(k).cast("int").alias("level"),
-            F.lit(step).alias("step"),
-            F.count("*").cast("long").alias("n_users"),
-        )
-        per_level = row if per_level is None else per_level.unionByName(row)
-    base = F.broadcast(
-        finals.agg(F.count("*").cast("double").alias("n1"))
+    return reach.select(per_level.alias("r"), "n1").select(
+        "r.*",
+        qround(F.col("r.n_users").cast("double") / F.col("n1").cast("double"), 6).alias(
+            "conversion_from_l1"
+        ),
     )
-    from ..numeric import qround
-
-    out = (
-        per_level.crossJoin(base)
-        .select(
-            "level",
-            "step",
-            "n_users",
-            qround(F.col("n_users").cast("double") / F.col("n1"), 6).alias(
-                "conversion_from_l1"
-            ),
-        )
-        .cache()
-    )
-    out.count()
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out

@@ -12,17 +12,16 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from cocktailsdb_spark.plans import layout  # noqa: E402
+from cocktailsdb_spark.session import conf_scope  # noqa: E402
 from cocktailsdb_spark.tables import load  # noqa: E402
 
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     layout.bucketed_join_revenue(spark, sf_dir)  # creates the bucketed tables
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = layout.bucketed_join_plan(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    l = spark.table("bucketdemo.lineitem_b")
+    o = spark.table("bucketdemo.orders_b")
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        plan = l.join(o, l.l_orderkey == o.o_orderkey)._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan
     assert "Exchange" not in plan, f"bucketed join should be shuffle-free:\n{plan}"
 

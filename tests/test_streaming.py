@@ -1,40 +1,30 @@
-"""Structured Streaming: checkpointed incremental file ingest (the
-streaming mapping of S9/S10) — each run processes only unseen files."""
+"""Structured Streaming: event-time semantics, the stream twins of batch
+operators, and the one runner every streaming entry goes through — it
+leaves no temp view, cache entry or scratch directory behind, restores
+the session's settings, and is the only place a query starts."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
+import glob
 import os
+import tempfile
 import uuid
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
+from cocktailsdb_spark.registry import QUERIES
+from cocktailsdb_spark.session import conf_scope
 from cocktailsdb_spark.streaming import stream_queries
 from cocktailsdb_spark.tables import load
 
+STREAM_ENTRIES = sorted(n for n in QUERIES if n.startswith("streaming_"))
 
-def test_incremental_append_processes_each_file_once(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    events = load(spark, sf_dir, "events")
-
-    batch1 = events.filter("user_id % 2 = 0")
-    batch1.write.parquet(os.path.join(src, "f1.parquet"))
-    stream_queries.streaming_incremental_append(spark, src + "/*", sink, ckpt)
-    n1 = spark.read.parquet(sink).count()
-    assert n1 == batch1.count()
-
-    batch2 = events.filter("user_id % 2 = 1")
-    batch2.write.parquet(os.path.join(src, "f2.parquet"))
-    stream_queries.streaming_incremental_append(spark, src + "/*", sink, ckpt)
-    n2 = spark.read.parquet(sink).count()
-    # second run appended ONLY the new file (checkpoint = high-water mark)
-    assert n2 == n1 + batch2.count()
-
-    # third run with nothing new appends nothing (idempotence)
-    stream_queries.streaming_incremental_append(spark, src + "/*", sink, ckpt)
-    assert spark.read.parquet(sink).count() == n2
+# query lifecycle calls that only the runner may make
+LIFECYCLE = {"readStream", "writeStream", "start", "processAllAvailable", "stop"}
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):
@@ -118,3 +108,93 @@ def test_streaming_error_burn_matches_batch(spark, sf_dir):
             s.burn_1h,
             s.burn_6h,
         )
+
+
+def _scratch_dirs() -> set[str]:
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "cdbspark_*")))
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _kept_entries() -> set[str]:
+    kept = stream_queries._KEPT
+    return set(os.listdir(kept[0])) if kept else set()
+
+
+@pytest.mark.parametrize("name", STREAM_ENTRIES)
+def test_streaming_entry_leaves_no_view_cache_or_scratch(spark, sf_dir, name):
+    """A memory-sink result is the sink's own rows: the entry drops the
+    sink's temp view, caches nothing and removes its scratch directory,
+    and the frame it returns still reads. Only a file sink's output
+    stays, in the one kept directory."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    views, dirs = _temp_views(spark), _scratch_dirs()
+    assert QUERIES[name](spark, sf_dir).collect()
+    assert _temp_views(spark) == views
+    assert cache.isEmpty()
+    assert _scratch_dirs() - dirs <= set(stream_queries._KEPT)
+
+
+def _failing_sink(batch, epoch_id, out):
+    raise RuntimeError("sink failed")
+
+
+@pytest.mark.parametrize(
+    "build, sink",
+    [
+        # a JVM-side failure inside a memory-sink query
+        (
+            lambda source: source().filter(
+                F.assert_true(F.col("user_id") < 0, "stream failed").isNull()
+            ),
+            "append",
+        ),
+        (stream_queries._whole, _failing_sink),
+    ],
+    ids=["memory", "foreach_batch"],
+)
+def test_failed_stream_leaves_nothing_and_restores_settings(spark, sf_dir, build, sink):
+    """A stream that fails removes its scratch directory (and a file
+    sink's output), drops its view, and puts back the shuffle partitions
+    and the state store provider as they were — set and unset."""
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    assert spark.conf.get(provider, None) is None
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "3"}):
+        views, dirs, kept = _temp_views(spark), _scratch_dirs(), _kept_entries()
+        with pytest.raises(Exception, match="(stream|sink) failed"):
+            stream_queries._run(
+                spark, sf_dir, build, sink, conf=stream_queries.ROCKSDB_STATE
+            )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert spark.conf.get(provider, None) is None
+        assert _temp_views(spark) == views
+        assert _scratch_dirs() - dirs <= set(stream_queries._KEPT)
+        assert _kept_entries() == kept
+
+
+def _lifecycle_outside_runner(source: str) -> list[str]:
+    """Lines of ``source`` that touch a streaming query's lifecycle
+    outside the ``_run`` function."""
+    tree = ast.parse(source)
+    runner = [
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "_run"
+    ]
+    inside = {id(n) for r in runner for n in ast.walk(r)}
+    return sorted(
+        f"line {n.lineno}: .{n.attr}"
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr in LIFECYCLE and id(n) not in inside
+    )
+
+
+def test_only_the_runner_starts_streams():
+    """One mechanism owns start → drain → stop: ``readStream``,
+    ``writeStream``, ``.start()``, ``processAllAvailable`` and ``.stop()``
+    appear in stream_queries.py only inside ``_run``."""
+    path = Path(stream_queries.__file__)
+    assert _lifecycle_outside_runner(path.read_text()) == []
+    copied = "def entry(df):\n    q = df.writeStream.format('memory').start()\n"
+    assert _lifecycle_outside_runner(copied) == ["line 2: .start", "line 2: .writeStream"]
